@@ -33,13 +33,16 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
     val times = names.map(n =>
       n -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val repTotals = (1 to reps).map { r =>
       graft.queries.Derived.clearMemo()
-      graft.queries.QueriesGraph.clearMemo()
       val tot = names.map { name =>
         val t0 = System.nanoTime()
         try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case _: Throwable => -1L }
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] rep $r $name FAILED: $e")
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         times(name) += dt
         dt
@@ -54,7 +57,8 @@ object Bench {
       s""""queries":${js(n => times(n).min)},""" +
       s""""queries_spread":${js(n => times(n).max - times(n).min)},""" +
       s""""reps":$reps,"rep_totals":[${repTotals.mkString(",")}],""" +
-      s""""sf":"$sfDir"}"""
+      s""""sf":"$sfDir",""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     println(line)
     // Durable copy: the driver captures stdout with a line cap that has
     // truncated the per-query map two rounds running (BENCH_r03/r04 show
@@ -67,6 +71,7 @@ object Bench {
       // must not fail a completed benchmark
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
+    graft.queries.Derived.clearMemo() // deletes the staged stream files
     spark.stop()
   }
 }

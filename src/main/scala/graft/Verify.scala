@@ -45,6 +45,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.queries.Derived.clearMemo() // deletes the staged stream files
     spark.stop()
   }
 }

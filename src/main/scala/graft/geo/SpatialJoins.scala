@@ -86,9 +86,11 @@ object SpatialJoins {
     }
 
     // state: (pid, plat, plon, b struct(dist, nid) | null) — best-so-far
-    var unresolved = points.select(col("pid"), col("plat"), col("plon"),
-      lit(null).cast("struct<dist:double,nid:bigint>").as("b"))
-      .localCheckpoint(true)
+    val (start, startRdds) = graft.runtime.CheckpointGen.persisted(spark.sparkContext)(
+      points.select(col("pid"), col("plat"), col("plon"),
+        lit(null).cast("struct<dist:double,nid:bigint>").as("b"))
+        .localCheckpoint(true))
+    var unresolved = start
     var results: Option[DataFrame] = None
     var kPrev = -1
     var k = 1
@@ -188,6 +190,8 @@ object SpatialJoins {
         k = math.min(k * 4, maxK)
       }
     }
+    // the first round read the start set eagerly; the results do not
+    startRdds.foreach(_.unpersist(blocking = false))
     results.getOrElse(
       points.sparkSession.emptyDataFrame
         .withColumn("pid", lit(0L)).withColumn("nn_nid", lit(0L))

@@ -46,6 +46,8 @@ object ConnectedComponents {
     *                      (see [[LocalMaxEdges]]); 0 forces the iterative
     *                      path (specs pin local ≡ iterative labels).
     * @return labels (nid, comp) covering every nid present in `edges`.
+    * @throws IllegalStateException if the star loop has not converged
+    *         after `maxRounds` rounds.
     */
   def run(
       edges: DataFrame,
@@ -68,8 +70,9 @@ object ConnectedComponents {
     // HYBRID small path: the fingerprint already counted the edge set (no
     // extra job); below the gate the whole component structure fits one
     // task, so a single union-find pass replaces the star loop. Durable
-    // checkpointers stay iterative (their resume contract is the loop).
-    if (checkpointer.isEmpty && prev._1 <= localMaxEdges)
+    // checkpointers stay iterative (their resume contract is the loop),
+    // and a gate of 0 always forces the loop, even on no edges.
+    if (checkpointer.isEmpty && localMaxEdges > 0 && prev._1 <= localMaxEdges)
       return Result(localLabels(e), 0)
     var done = false
 
@@ -96,6 +99,10 @@ object ConnectedComponents {
       e = next
       rounds += 1
     }
+    // an unconverged edge set is not a star forest: its labels are wrong
+    if (!done)
+      throw new IllegalStateException(s"connected components did not converge " +
+        s"in $maxRounds rounds (${prev._1} edges left)")
 
     // Converged edge set is a star forest: (child, root) with root = min.
     val roots = e.select(col("dst").as("nid"), col("dst").as("comp")).distinct()

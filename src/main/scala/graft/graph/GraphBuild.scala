@@ -276,6 +276,12 @@ object GraphBuild {
     * function and keep the distributed form; the q119 gate (threshold 1)
     * routes fixture components, which localise.
     *
+    * Per-task memory at the default: the local body holds ~0.6 KB of
+    * heap per edge (boxed rows, edge map, adjacency sets). A 2M-edge
+    * component (a 1000×1000 grid, no merges) needed 1.25 GB of heap; at
+    * 1 GB it ran out (standalone JVM, JDK 17, G1). Size executor memory
+    * at ~1.3 GB per concurrent task, or lower `localPerCompMax`.
+    *
     * @param edges (comp, src, dst) canonical (deduplicated) undirected
     * @return (comp, num_nodes)
     */

@@ -106,8 +106,7 @@ object Derived {
 
   /** Canonical undirected edge set (src < dst, distinct) — memoised per
     * dir: ~15 graph queries re-derived this identical union+distinct
-    * shuffle from parquet every time (guide §2.4). First caller in a rep
-    * computes it from the parquet inputs; Bench clears the memo per rep.
+    * shuffle from parquet every time (guide §2.4).
     */
   def edgesDF(spark: SparkSession, dir: String): DataFrame =
     memoize(s"edges:$dir") {
@@ -160,37 +159,53 @@ object Derived {
        |  )
        |)""".stripMargin.replace("\n", " ")
 
-  // ---- cross-query memo (Verify/Bench run every query against the same
-  // dir; iterative results are expensive and identical) -----------------
+  // ---- the cross-query memo registry: key → (value, release) -----------
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val entries = new java.util.HashMap[String, (Any, () => Unit)]()
+
+  def computeIfAbsent[T](key: String)(build: => T): T =
+    computeIfAbsent(key, (_: T) => ())(build)
+
+  /** Get-or-build `key` (Verify, Bench and the benchmark run every query
+    * against one dir; derived frames and iterative results are identical
+    * across them). One reentrant lock, and the builder runs with no map
+    * bin reserved, so a builder may read other entries (nodes → edges,
+    * minhashcand → shinglesets). [[clearMemo]] unpersists the RDDs the
+    * build persisted ([[graft.runtime.CheckpointGen.persisted]]) and
+    * runs `release(value)`. Job tracers find memo builds by this
+    * method's name.
+    */
+  def computeIfAbsent[T](key: String, release: T => Unit)(build: => T): T =
+    entries.synchronized {
+      entries.get(key) match {
+        case null =>
+          val (v, rdds) = graft.runtime.CheckpointGen.persisted(
+            SparkSession.active.sparkContext)(build)
+          entries.put(key, (v, () => { rdds.foreach(_.unpersist(blocking = false)); release(v) }))
+          v
+        case (v, _) => v.asInstanceOf[T]
+      }
+    }
+
+  /** [[computeIfAbsent]] for a frame, checkpointed once by the registry. */
   def memoize(key: String)(f: => DataFrame): DataFrame =
-    memo.computeIfAbsent(key, _ => f.localCheckpoint(true))
+    computeIfAbsent(key)(f.localCheckpoint(true))
 
-  /** [[memoize]] for frames the builder already materialized (its own
-    * localCheckpoint) — no second checkpoint copy. */
-  def memoizeRaw(key: String)(f: => DataFrame): DataFrame =
-    memo.computeIfAbsent(key, _ => f)
+  /** Release every entry and drop it (Bench clears between reps, so each
+    * rep pays the full derivation cost). */
+  def clearMemo(): Unit = entries.synchronized {
+    entries.values.forEach(_._2())
+    entries.clear()
+  }
 
   /** The cell-indexed node frame the kNN queries search (q22, q36) —
-    * built and checkpointed once per (res, dir) via
-    * [[graft.geo.SpatialJoins.cellIndexedNodes]]. */
+    * [[graft.geo.SpatialJoins.cellIndexedNodes]] checkpoints it. */
   def nodesCellMemo(spark: SparkSession, dir: String, res: Int): DataFrame =
-    memoizeRaw(s"nodescell:$res:$dir") {
+    computeIfAbsent(s"nodescell:$res:$dir") {
       graft.geo.SpatialJoins.cellIndexedNodes(nodesDF(spark, dir), res)
     }
 
-  /** Drop every memoised frame (Bench calls this between reps so each
-    * rep pays the full iterative cost instead of reusing warm caches).
-    * Also drops the shared stream staging dir for the same reason —
-    * every rep re-stages the quartile files once.
-    */
-  def clearMemo(): Unit = {
-    memo.clear()
-    QueriesStream.clearStaging()
-  }
-
-  /** Equal-split upstream over the DAG: (nodeUpstream, edgeFlow) memoised.
+  /** Equal-split upstream over the DAG: node upstreams and edge flows.
     *
     * Hybrid engine (Flow.upstreamFlowHybrid): components under the size
     * threshold run the exact local Kahn walk in one shuffle instead of
@@ -199,19 +214,15 @@ object Derived {
     * labels it needs are exactly the memoised [[QueriesGraph.ccLabels]]
     * (the DAG orientation is over the same canonical undirected edges).
     */
-  def dagUpstreamNodes(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"upnodes:$dir") {
+  def dagUpstream(spark: SparkSession, dir: String): graft.graph.Flow.UpstreamResult =
+    computeIfAbsent(s"upstream:$dir") {
       val r = graft.graph.Flow.upstreamFlowHybrid(
         dagEdgesDF(spark, dir)
           .withColumn("tag", lit(null).cast("string")),
         labels = Some(QueriesGraph.ccLabels(spark, dir)))
-      memo.put(s"upflows:$dir", r.edgeFlow.localCheckpoint(true))
-      r.nodeUpstream
+      r.copy(nodeUpstream = r.nodeUpstream.localCheckpoint(true),
+        edgeFlow = r.edgeFlow.localCheckpoint(true))
     }
-  def dagUpstreamFlows(spark: SparkSession, dir: String): DataFrame = {
-    dagUpstreamNodes(spark, dir) // ensure both entries exist
-    memo.get(s"upflows:$dir")
-  }
 
   /** SCC of the cyclic orientation, memoised. The weak-CC pass reuses the
     * memoised [[QueriesGraph.ccLabels]]: the cyclic orientation adds only
@@ -247,7 +258,7 @@ object Derived {
   def dagEndAssignmentDm(spark: SparkSession, dir: String): DataFrame =
     memoize(s"assigndm:$dir") {
       val dag = dagEdgesDF(spark, dir)
-      val up = dagUpstreamNodes(spark, dir)
+      val up = dagUpstream(spark, dir).nodeUpstream
         .select(col("nid"),
           expr("CAST(FLOOR(upstream_m * 10 + 0.5) AS BIGINT)").cast("double")
             .as("upstream_m"))

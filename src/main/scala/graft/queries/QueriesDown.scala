@@ -103,7 +103,7 @@ object QueriesDown {
     // S9 — ends ranked by (rounded) upstream desc
     "q42_ends_ranked" -> ((s, d) => {
       val dag = dagEdgesDF(s, d)
-      val up = dagUpstreamNodes(s, d)
+      val up = dagUpstream(s, d).nodeUpstream
         .select(col("nid"), (expr(dmSql("upstream_m")) / 10.0).as("upstream_m"))
       val ends = Flow.endPoints(dag).join(up, Seq("nid"))
       DownOps.endsRanked(ends, nodesDF(s, d))

@@ -17,7 +17,7 @@ object QueriesRivers {
       val lens = dagEdgesDF(s, d).select("src", "dst", "len")
       // equal-split flows (memoised); tag-grouped split differs only at
       // multi-out nodes and is covered by the Flow fixtures
-      val flows = dagUpstreamFlows(s, d).select("src", "dst", "flow_m")
+      val flows = dagUpstream(s, d).edgeFlow.select("src", "dst", "flow_m")
       DownOps.groupedWaterways(tg, lens, flows)
         .select(col("tag"), col("tag_group_nid"), col("n_edges"),
           expr("CAST(FLOOR(cum_length_m * 10 + 0.5) AS BIGINT)").as("cum_len_dm"),
@@ -33,7 +33,7 @@ object QueriesRivers {
     "q48_grouped_ends" -> ((s, d) => {
       val assign = dagEndAssignmentDm(s, d)
       DownOps.groupedEnds(
-        dagUpstreamFlows(s, d).select("src", "dst", "flow_m"), assign)
+        dagUpstream(s, d).edgeFlow.select("src", "dst", "flow_m"), assign)
         .select(col("end_nid"),
           explode(expr(
             """transform(sequence(0, size(line) - 2),

@@ -52,12 +52,17 @@ object QueriesStream {
           val src = java.nio.file.Files.list(part).toArray.map(_.toString)
             .filter(_.endsWith(".parquet")).head
           java.nio.file.Files.move(java.nio.file.Paths.get(src), tgt)
+          delete(part.toString)
       }
       java.nio.file.Files.setLastModifiedTime(tgt,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
+    delete(stage.toString)
     dir.toString
   }
+
+  private def delete(path: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
 
   /** The four time-quartile files every stateful stream replay shares:
     * ONE staging pass (events scan + percentile + partitioned write)
@@ -66,17 +71,11 @@ object QueriesStream {
     * redundant full passes + checkpoints per rep). Quartile boundaries
     * and per-file row sets are unchanged, so batch boundaries, state
     * transitions and every output row are identical; each stream
-    * projects its own columns after `readStream`. Keyed by input dir;
-    * [[Derived.clearMemo]] drops it between bench reps so every rep
-    * pays the staging exactly once.
+    * projects its own columns after `readStream`. A memo entry per input
+    * dir; [[Derived.clearMemo]] deletes the staged files.
     */
-  private val stagedShared =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[queries] def clearStaging(): Unit = stagedShared.clear()
-
   private def sharedQuartileDir(s: SparkSession, d: String): String =
-    stagedShared.computeIfAbsent(d, _ => {
+    Derived.computeIfAbsent(s"sharedq:$d", delete) {
       val ev = s.read.parquet(s"$d/events.parquet")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),
@@ -86,7 +85,7 @@ object QueriesStream {
         // two consumers (percentile probe + partitioned write): one scan
         .localCheckpoint(true)
       stageQuartileFiles(ev, "sharedq")
-    })
+    }
 
   /** Start-and-drain a bounded stateful stream with a SMALL
     * state-partition count and a tmpfs checkpoint, then return the
@@ -109,7 +108,10 @@ object QueriesStream {
       val q = build(ckpt)
       q.processAllAvailable()
       q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prevSp)
+      delete(ckpt)
+    }
     s.table(sinkName).localCheckpoint(true)
   }
 
@@ -125,7 +127,7 @@ object QueriesStream {
         dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
       // small-state run (the q79 fix): the complete-mode agg state store
       // commits session-partition-count files per batch otherwise
-      runSmallStateStream(s, sinkName) { ckpt =>
+      try runSmallStateStream(s, sinkName) { ckpt =>
         s.readStream
           .schema(schema)
           .parquet(dir.toString)
@@ -140,7 +142,7 @@ object QueriesStream {
           .option("checkpointLocation", ckpt)
           .queryName(sinkName)
           .start()
-      }
+      } finally delete(dir.toString)
     }),
 
     // watermarked APPEND-mode windowed aggregation — the third streaming

@@ -31,12 +31,12 @@ object QueriesText {
   private def t(s: SparkSession, d: String, n: String): DataFrame =
     s.read.parquet(s"$d/$n.parquet")
 
-  /** The suffix-array frame q109/q110 share (ranked once per input dir;
-    * Bench clears the memo per rep). At cap=128 the ranking is ONE range
-    * exchange sorting the windows themselves (SuffixArray.DirectSortCap),
-    * so the win payload already rode the only exchange — one full frame
-    * (doc_id, pos, win, sa_rank) serves q109 (projection, no join) and
-    * q110 (adjacent-LCP, no rank⋈window join either).
+  /** The suffix-array frame q109/q110 share. At cap=128 the ranking is
+    * ONE range exchange sorting the windows themselves
+    * (SuffixArray.DirectSortCap), so the win payload already rode the
+    * only exchange — one full frame (doc_id, pos, win, sa_rank) serves
+    * q109 (projection, no join) and q110 (adjacent-LCP, no rank⋈window
+    * join either).
     */
   private def saMemo(s: SparkSession, d: String): DataFrame =
     memoize(s"suffixfull:$d") {
@@ -618,12 +618,6 @@ object QueriesText {
     * 3-shingle Jaccard per pair — distinct md5h32 shingle-hash sets on
     * each side, |A∩B| / (|A|+|B|−|A∩B|), e6-floored like the engine.
     */
-  /** q59 body, shared with q64: exact n-gram Jaccard over the MinHash-LSH
-    * candidate pairs. The candidate set is the small side (bucket-capped
-    * banding), so it broadcasts against the big documents table twice and
-    * the full table never shuffles; if candidates ever outgrow the
-    * broadcast limit, drop the hints and AQE picks a shuffle join.
-    */
   /** The distinct shingle-hash sets and the MinHash-LSH candidate pairs
     * the whole near-dup family shares (q32 emits the candidates, q59
     * Jaccard-verifies them, q96 computes containment, q90 edit-verifies;
@@ -643,28 +637,32 @@ object QueriesText {
       Dedup.minhashCandidatesFromHashes(shingleSetsMemo(s, d))
     }
 
+  /** q59 body, shared with q64: exact n-gram Jaccard over the MinHash-LSH
+    * candidate pairs. The candidate set is the small side (bucket-capped
+    * banding), so it broadcasts against the big documents table twice and
+    * the full table never shuffles; if candidates ever outgrow the
+    * broadcast limit, drop the hints and AQE picks a shuffle join.
+    */
   private def jaccardVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    memoize(s"jaccardverified:$d") { jaccardVerifiedPairsBody(s, d) }
-
-  private def jaccardVerifiedPairsBody(s: SparkSession, d: String): DataFrame = {
-    // the distinct shingle-hash set is staged ONCE per doc and feeds
-    // both the banding and the exact verify (signatures are identical
-    // on the distinct set); re-hashing text per candidate pair was 48 s
-    // of a 140 s 500k-doc pipeline (BENCH.md round 4); memoised (like
-    // saMemo) because q59 AND q95 both run the full pipeline
-    val sets = shingleSetsMemo(s, d)
-    val cand = minhashCandMemo(s, d)
-    val withA = sets
-      .select(col("id").as("id_a"), col("hs").as("hs_a"))
-      .join(broadcast(cand), Seq("id_a"))
-    sets.select(col("id").as("id_b"), col("hs").as("hs_b"))
-      .join(broadcast(withA), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        floor(Dedup.jaccardByHashSets(col("hs_a"), col("hs_b")) *
-          lit(1000000.0) + lit(0.5)).cast("long").as("j_e6"))
-      .withColumn("is_dup",
-        when(col("j_e6") >= 500000L, 1L).otherwise(0L))
-  }
+    memoize(s"jaccardverified:$d") {
+      // the distinct shingle-hash set is staged ONCE per doc and feeds
+      // both the banding and the exact verify (signatures are identical
+      // on the distinct set); re-hashing text per candidate pair was 48 s
+      // of a 140 s 500k-doc pipeline (BENCH.md round 4); memoised (like
+      // saMemo) because q59 AND q95 both run the full pipeline
+      val sets = shingleSetsMemo(s, d)
+      val cand = minhashCandMemo(s, d)
+      val withA = sets
+        .select(col("id").as("id_a"), col("hs").as("hs_a"))
+        .join(broadcast(cand), Seq("id_a"))
+      sets.select(col("id").as("id_b"), col("hs").as("hs_b"))
+        .join(broadcast(withA), Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          floor(Dedup.jaccardByHashSets(col("hs_a"), col("hs_b")) *
+            lit(1000000.0) + lit(0.5)).cast("long").as("j_e6"))
+        .withColumn("is_dup",
+          when(col("j_e6") >= 500000L, 1L).otherwise(0L))
+    }
 
   /** q96 body: Broder containment over the same staged shingle-hash
     * sets and the same broadcast candidate frame as q59 —

@@ -1,5 +1,7 @@
 package graft.runtime
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 /** Rotating eager local checkpoints for iterative DataFrame loops.
@@ -23,7 +25,7 @@ import org.apache.spark.sql.DataFrame
   * result); frames checkpointed outside this instance are untouched.
   */
 final class CheckpointGen {
-  private var liveIds: Set[Int] = Set.empty
+  private var live: Seq[RDD[_]] = Nil
 
   /** Eagerly localCheckpoint `df`, then release the blocks of the
     * previous frame rotated through this instance. Safe because the
@@ -31,14 +33,23 @@ final class CheckpointGen {
     * previous generation) before anything is unpersisted.
     */
   def rotate(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = df.localCheckpoint(true)
-    val created = sc.getPersistentRDDs.keySet.toSet.diff(before)
-    val stale = liveIds
-    liveIds = created
-    stale.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    val (out, created) =
+      CheckpointGen.persisted(df.sparkSession.sparkContext)(df.localCheckpoint(true))
+    val stale = live
+    live = created
+    stale.foreach(_.unpersist(blocking = false))
     out
+  }
+}
+
+object CheckpointGen {
+  /** Run `body` and return its value with the RDDs it persisted — the
+    * diff of `sc.getPersistentRDDs` around the call — so the caller can
+    * unpersist checkpoint blocks `Dataset.unpersist` cannot reach.
+    */
+  def persisted[T](sc: SparkContext)(body: => T): (T, Seq[RDD[_]]) = {
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val v = body
+    (v, sc.getPersistentRDDs.filter(kv => !before(kv._1)).values.toList)
   }
 }

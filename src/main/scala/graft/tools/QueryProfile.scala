@@ -78,7 +78,6 @@ object QueryProfile {
 
     for (name <- names) {
       graft.queries.Derived.clearMemo()
-      graft.queries.QueriesGraph.clearMemo()
       stages.clear(); jobLog.clear(); stageJob.clear(); jobs = 0
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()

@@ -92,11 +92,14 @@ object LinkGraph {
       : Option[org.apache.spark.sql.Dataset[(Boolean, Long, Long)]] = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    if (localMax < 0 || nodes.count() > localMax) return None
+    // bounded counts: an at-scale frame is read only up to the gate, and
+    // the edges are checkpointed only once the local path is taken
+    def over(df: DataFrame) =
+      df.limit(math.min(localMax, Int.MaxValue - 1L).toInt + 1).count() > localMax
+    if (localMax < 0 || over(nodes) || over(edges)) return None
     val e0 = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .localCheckpoint(true)
-    if (e0.count() > localMax) return None
     Some(nodes
       .select(lit(true).as("n"), col("doc_id").cast("long").as("a"),
         lit(0L).as("b"))

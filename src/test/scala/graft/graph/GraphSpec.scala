@@ -109,6 +109,20 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(r1.rounds == 0) // the local path is round-free by construction
   }
 
+  test("CC gate 0 forces the star loop even on an empty edge set") {
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val r = ConnectedComponents.run(none, localMaxEdges = 0L)
+    assert(r.rounds >= 1)
+    assert(r.labels.count() == 0L)
+  }
+
+  test("CC fails loudly when the star loop hits maxRounds") {
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    val err = intercept[IllegalStateException](
+      ConnectedComponents.run(chain, maxRounds = 1, localMaxEdges = 0L))
+    assert(err.getMessage.contains("1 rounds"), err.getMessage)
+  }
+
   test("fx-confluence: two streams joining (D5 upstream sums)") {
     val e = Seq((1L, 3L, 10.0), (2L, 3L, 20.0), (3L, 4L, 5.0))
       .toDF("src", "dst", "len")
