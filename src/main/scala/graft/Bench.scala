@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark surface the driver records per round. The sandbox host has
   * bursty co-tenant contention (BENCH.md: identical code measured 200 s
@@ -12,64 +11,71 @@ import org.apache.spark.sql.SparkSession
   * plus the max−min spread (how noisy the window was).
   */
 object Bench {
+  /** One run of one query; only an `ok` run is a timing sample. */
+  final case class Sample(query: String, rep: Int, secs: Double, ok: Boolean)
+
+  /** The bench JSON line. Only successful runs are samples: a query's
+    * figure is the min (and max−min spread) of its successful reps, a
+    * rep total sums that rep's successful runs, and a query that never
+    * succeeded is left out of `queries`, `queries_spread` and `value`
+    * and named only under `failed` (with every query that failed once).
+    */
+  def line(samples: Seq[Sample], reps: Int, sfDir: String): String = {
+    val ok = samples.filter(_.ok)
+    val times = samples.map(_.query).distinct
+      .map(n => n -> ok.filter(_.query == n).map(_.secs)).filter(_._2.nonEmpty)
+    val failed = samples.filterNot(_.ok).map(_.query).distinct
+    val repTotals = (1 to reps).map(r => ok.filter(_.rep == r).map(_.secs).sum)
+    def js(f: Seq[Double] => Double) =
+      times.map { case (n, t) => "\"" + n + "\":" + f(t) }.mkString("{", ",", "}")
+    val total = times.map(_._2.min).sum
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${js(_.min)},""" +
+      s""""queries_spread":${js(t => t.max - t.min)},""" +
+      s""""reps":$reps,"rep_totals":[${repTotals.mkString(",")}],""" +
+      s""""sf":"$sfDir",""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Sessions.local(cpus, cpus)
     // optional comma-separated subset for local iteration (the driver
     // runs the full suite: env unset → all queries)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val times = names.map(n =>
-      n -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val repTotals = (1 to reps).map { r =>
+    val samples = (1 to reps).flatMap { r =>
       graft.queries.Derived.clearMemo()
-      val tot = names.map { name =>
+      val rep = names.map { name =>
         val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] rep $r $name FAILED: $e")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        times(name) += dt
-        dt
-      }.sum
-      System.err.println(f"[bench] rep $r/$reps: $tot%.1f s")
-      tot
+        val ok =
+          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] rep $r $name FAILED: $e")
+            false
+          }
+        Sample(name, r, (System.nanoTime() - t0) / 1e9, ok)
+      }
+      System.err.println(f"[bench] rep $r/$reps: ${rep.filter(_.ok).map(_.secs).sum}%.1f s")
+      rep
     }
-    def js(f: String => Double) =
-      names.map(n => "\"" + n + "\":" + f(n)).mkString("{", ",", "}")
-    val total = names.map(n => times(n).min).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":${js(n => times(n).min)},""" +
-      s""""queries_spread":${js(n => times(n).max - times(n).min)},""" +
-      s""""reps":$reps,"rep_totals":[${repTotals.mkString(",")}],""" +
-      s""""sf":"$sfDir",""" +
-      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
-    println(line)
+    val out = line(samples, reps, sfDir)
+    println(out)
     // Durable copy: the driver captures stdout with a line cap that has
     // truncated the per-query map two rounds running (BENCH_r03/r04 show
     // "parsed": null) — the file keeps the complete record either way.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes("UTF-8"))
+    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (out + "\n").getBytes("UTF-8"))
     catch { case e: java.io.IOException =>
       // the stdout line above is the primary record; an unwritable cwd
       // must not fail a completed benchmark
-      System.err.println(s"[bench] could not write $out: ${e.getMessage}")
+      System.err.println(s"[bench] could not write $path: ${e.getMessage}")
     }
     graft.queries.Derived.clearMemo() // deletes the staged stream files
     spark.stop()

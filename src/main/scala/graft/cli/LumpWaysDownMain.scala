@@ -30,17 +30,8 @@ object LumpWaysDownMain {
         System.err.println(s"error: $err")
         sys.exit(2)
       case Right(args) =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .appName("graft-lump-ways-down")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.ansi.enabled", "false")
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+        val spark = graft.runtime.Sessions.local(cpus, cpus)
         try run(args, spark)
         catch {
           case e: IllegalArgumentException =>

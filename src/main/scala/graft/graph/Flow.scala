@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.runtime.CheckpointGen
 
 /** Directed-flow operators (SURVEY.md §2.6): end points, topological
   * frontier propagation of upstream metres with the reference's full
@@ -243,10 +244,7 @@ object Flow {
       spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
       eCount / 100000L + 1L)).toInt
     val part = new HashPartitioner(nParts)
-    if (spark.sparkContext.getCheckpointDir.isEmpty && spark.sparkContext.isLocal)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-rdd-ckpt").toString)
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.nonEmpty
+    val reliableCkpt = CheckpointGen.reliableDir(spark.sparkContext)
 
     type Edge = (Long, Option[String], Double) // (dst, tag, len)
     val eRdd = e0.as[(Long, Long, Double, Option[String])].rdd
@@ -507,14 +505,7 @@ object Flow {
       spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
       eCount / 100000L + 1L)).toInt
     val part = new HashPartitioner(nParts)
-    // reliable checkpoints need a SHARED path on a real cluster; only
-    // default to a temp dir in local mode (a driver-local path would be
-    // invisible to remote executors). Clusters without a configured
-    // checkpoint dir fall back to pinned localCheckpoints.
-    if (spark.sparkContext.getCheckpointDir.isEmpty && spark.sparkContext.isLocal)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-rdd-ckpt").toString)
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.nonEmpty
+    val reliableCkpt = CheckpointGen.reliableDir(spark.sparkContext)
     val eByDst = edges
       .select(col("dst").cast("long"), col("src").cast("long"))
       .as[(Long, Long)].rdd

@@ -43,6 +43,22 @@ final class CheckpointGen {
 }
 
 object CheckpointGen {
+  /** Whether `sc` has a reliable checkpoint dir, setting one first in
+    * local mode: a new `graft-rdd-ckpt*` temp dir, deleted with its
+    * contents when the JVM exits. Reliable checkpoints need a SHARED path
+    * on a real cluster (a driver-local dir is invisible to remote
+    * executors), so a cluster without a configured dir gets none and its
+    * callers fall back to pinned localCheckpoints.
+    */
+  def reliableDir(sc: SparkContext): Boolean = synchronized {
+    if (sc.getCheckpointDir.isEmpty && sc.isLocal) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-rdd-ckpt").toFile
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+      sc.setCheckpointDir(dir.toString)
+    }
+    sc.getCheckpointDir.nonEmpty
+  }
+
   /** Run `body` and return its value with the RDDs it persisted — the
     * diff of `sc.getPersistentRDDs` around the call — so the caller can
     * unpersist checkpoint blocks `Dataset.unpersist` cannot reach.

@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
 /** Phase-level profiler for the text near-dup pipeline (the
-  * [[DedupAtScale]] job): signatures, LSH banding, candidate pairing,
+  * `ScaleEvidence dedup` job): signatures, LSH banding, candidate pairing,
   * exact Jaccard verify, CC collapse — each phase checkpointed so the
   * wall time attributes to that phase alone.
   */
@@ -13,16 +12,7 @@ object DedupProfile {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_DEDUP_N", "500000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Sessions.local(cpus, cpus * 4)
 
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -32,7 +22,7 @@ object DedupProfile {
     }
 
     val docs = phase("generate")(
-      DedupAtScale.documents(spark, n).localCheckpoint(true))
+      ScaleEvidence.documents(spark, n).localCheckpoint(true))
     val hs = phase("shingle-md5")(
       docs.select(col("doc_id").as("id"),
         Dedup.distinctShingleHashes(col("text")).as("hs")).localCheckpoint(true))

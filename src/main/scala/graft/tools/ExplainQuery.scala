@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: print the formatted physical plan of one or more
   * `SparkEntry.queries` entries without executing them (analysis +
   * optimization only). Usage:
@@ -14,16 +12,9 @@ import org.apache.spark.sql.SparkSession
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.runtime.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
     val names =
       if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.fixtures.Synthetic
 
 /** Writes a small synthetic ways/nodes parquet input dir for CLI runs. */
@@ -8,10 +7,7 @@ object MakeFixtureInput {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_cli_input")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_WAYS", "5000").toLong
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Sessions.local(8, 8)
     val ways = Synthetic.ways(spark, n).localCheckpoint(true)
     ways.write.mode("overwrite").parquet(s"$out/ways.parquet")
     Synthetic.nodesFor(ways).write.mode("overwrite").parquet(s"$out/nodes.parquet")

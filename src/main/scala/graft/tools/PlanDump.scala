@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` of selected bench queries to files —
   * the optimization-round evidence artifact (plans/rNN/<q>_<tag>.txt).
   * Diagnostics only; the Bench/Verify surfaces are untouched.
@@ -16,20 +14,13 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val tag = sys.env.getOrElse("PD_TAG", "after")
     val outDir = sys.env.getOrElse("PD_DIR", "plans/r06")
     val names = sys.env.getOrElse("PD_QUERIES", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Sessions.local(cpus, cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       spark.sparkContext.setJobDescription(s"plandump:$name")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.fixtures.Synthetic
 import graft.graph.{ConnectedComponents, GraphBuild}
@@ -10,14 +9,8 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val nWays = sys.env.getOrElse("SPARK_GRAFT_SCALE_WAYS", "200000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Sessions.local(cpus,
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(cpus))
 
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()

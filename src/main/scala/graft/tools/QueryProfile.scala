@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query empirical breakdown (guide §1.1): run selected bench queries
   * with a listener that tallies jobs/stages/task-time, so optimization
@@ -15,21 +14,14 @@ import org.apache.spark.sql.SparkSession
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val names = sys.env.getOrElse("QP_QUERIES",
       "q109_suffix_array,q120_betweenness_at_scale,q45_betweenness," +
         "q119_sharded_geom_cover,q18_upstream,q22_knn,q19_scc," +
         "q35_lump_pipeline").split(",").map(_.trim).filter(_.nonEmpty)
     val topN = sys.env.getOrElse("QP_TOP", "14").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Sessions.local(cpus, cpus)
 
     final case class St(name: String, var n: Int = 0, var wallMs: Long = 0L,
       var taskMs: Long = 0L, var tasks: Int = 0, var shRead: Long = 0L,

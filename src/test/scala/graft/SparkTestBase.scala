@@ -1,24 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import java.nio.file.Files
 
 /** One shared local session for all suites (object = JVM-wide). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.runtime.Sessions.local(4, 4)
 }
 
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Run `f` on a new temp dir named `prefix…`; the dir and everything in
+    * it are deleted when `f` returns or throws. */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try f(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

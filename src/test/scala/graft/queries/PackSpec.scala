@@ -29,8 +29,7 @@ class PackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   // run q80/q81 over a tiny staged documents.parquet with known token counts
-  private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("packspec").toString
+  private def withDocs[A](f: String => A): A = withTempDir("packspec") { d =>
     val docs = Seq(
       (1L, ("a " * 300).trim, "en", "s", 0L), // 300 tokens: multi-chunk
       (2L, "b b b", "en", "s", 0L),           // 3 tokens: single chunk
@@ -38,7 +37,7 @@ class PackSpec extends AnyFunSuite with SparkTestBase {
       (4L, ("c " * 128).trim, "en", "s", 0L)) // exactly one window
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
+    f(d)
   }
 
   test("topFractionPerGroup: exact per-group ranks and ceil quota, " +
@@ -72,8 +71,8 @@ class PackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q80: windows cover every token, stride 96, width <= 128") {
-    val rows = QueriesPack.queries("q80_chunk_windows")(spark, dir)
-      .as[(Long, Long, Long, Long)].collect().groupBy(_._1)
+    val rows = withDocs(d => QueriesPack.queries("q80_chunk_windows")(spark, d)
+      .as[(Long, Long, Long, Long)].collect()).groupBy(_._1)
     // doc 1: n=300 -> nchunks = ceil((300-128)/96)+1 = 3; starts 0,96,192
     assert(rows(1L).map(r => (r._2, r._3, r._4)).sortBy(_._1).toSeq ===
       Seq((0L, 0L, 128L), (1L, 96L, 128L), (2L, 192L, 108L)))
@@ -86,8 +85,8 @@ class PackSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q81: packed spans partition each doc and fill every sequence") {
-    val out = QueriesPack.queries("q81_seq_pack")(spark, dir)
-      .as[(Long, Long, Long, Long)].collect()
+    val out = withDocs(d => QueriesPack.queries("q81_seq_pack")(spark, d)
+      .as[(Long, Long, Long, Long)].collect())
     // per-doc token conservation (empty doc 3 emits nothing)
     val perDoc = out.groupBy(_._1).view.mapValues(_.map(_._4).sum).toMap
     assert(perDoc === Map(1L -> 300L, 2L -> 3L, 4L -> 128L))

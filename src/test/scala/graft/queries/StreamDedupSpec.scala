@@ -15,22 +15,22 @@ class StreamDedupSpec extends AnyFunSuite with SparkTestBase {
   // with type t{i%2} and i%2 == (i%4)%2, so the key space is
   // {(0,t0),(1,t1),(2,t0),(3,t1)} and every key recurs every 4 minutes
   // across the whole 40-minute span: present in ALL four quartiles.
-  private def writeEvents(): String = {
+  private def writeEvents(dir: String): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sdedup_sf").toString
     (0 until 40).map { i =>
       (i.toLong, (i % 4).toLong, s"t${i % 2}",
         java.sql.Timestamp.valueOf(f"2024-01-01 00:$i%02d:00"), 1.0)
     }.toDF("event_id", "user_id", "event_type", "ts", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
   }
 
   test("streaming dedup: later-batch repeats suppressed, key set exact") {
-    val dir = writeEvents()
-    val out = SparkEntry.queries("q60_stream_dedup")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(out === Set((0L, "t0"), (1L, "t1"), (2L, "t0"), (3L, "t1")))
+    withTempDir("sdedup_sf") { dir =>
+      writeEvents(dir)
+      val out = SparkEntry.queries("q60_stream_dedup")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(out === Set((0L, "t0"), (1L, "t1"), (2L, "t0"), (3L, "t1")))
+    }
   }
 
   test("testdata events: keys span quartiles (state is exercised there too)") {
