@@ -529,12 +529,7 @@ object Dedup {
   def cosineTopK(
       embeddings: DataFrame, idCol: String, vecCol: String, k: Int,
       bcastMaxRows: Long = 2000000L): DataFrame =
-    // gate probe: limit(gate+1).count() short-circuits the scan once
-    // gate+1 rows are seen — a full count() materialised the whole input
-    // a second time just to pick the route
-    if (embeddings.select(idCol)
-        .limit(math.min(bcastMaxRows + 1, Int.MaxValue.toLong).toInt)
-        .count() <= bcastMaxRows)
+    if (graft.runtime.Gate("cosine-broadcast", bcastMaxRows).admits(embeddings.select(idCol)))
       bruteForceCosineTopK(embeddings, idCol, vecCol, k)
     else
       annCosineTopK(embeddings, idCol, vecCol, k)

@@ -58,12 +58,16 @@ object Raster {
     * isolated tiles are their own blob.
     *
     * @param cells (cell, x, y, v)
+    * @param driverMaxRes resolutions at or below this label blobs with
+    *                     one driver-side union-find; 0 forces the
+    *                     distributed tile-adjacency CC
     * @return (blob, n_cells, v_sum, min_x, max_x, min_y, max_y)
     */
-  def vectorize(cells: DataFrame, minV: Long, res: Int): DataFrame = {
+  def vectorize(cells: DataFrame, minV: Long, res: Int,
+      driverMaxRes: Long = 10L): DataFrame = {
     val n = 1L << res
     val t = cells.filter(col("v") >= minV).select("cell", "x", "y", "v")
-    if (res <= 10) {
+    if (graft.runtime.Gate("raster-driver", driverMaxRes).admits(res)) {
       // The tile graph is bounded by the GRID (4^res cells — ≤ ~1M at
       // res 10), not by the input size: `cells` is already the per-tile
       // aggregate. Blob labelling is a driver union-find over that
@@ -78,30 +82,17 @@ object Raster {
         .as[(Long, Long, Long, Long)].collect()
       val cellAt = new scala.collection.mutable.HashMap[(Long, Long), Long]
       rows.foreach { case (c, x, y, _) => cellAt((x, y)) = c }
-      val parent = new scala.collection.mutable.HashMap[Long, Long]
-      def find(a: Long): Long = {
-        var r = a
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = a
-        while (parent.getOrElse(c, c) != c) {
-          val nx = parent(c); parent(c) = r; c = nx
-        }
-        r
-      }
-      def union(a: Long, b: Long): Unit = {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra <= rb) parent(rb) = ra else parent(ra) = rb }
-      }
+      val uf = new graft.graph.Local.MinUnionFind
       rows.foreach { case (c, x, y, _) =>
         // 4-neighbour adjacency, longitude-wrapping in x (same pairs as
         // the former (ax+1)%n == bx / ay+1 == by equi-joins)
-        cellAt.get(((x + 1) % n, y)).foreach(union(c, _))
-        cellAt.get((x, y + 1)).foreach(union(c, _))
+        cellAt.get(((x + 1) % n, y)).foreach(uf.union(c, _))
+        cellAt.get((x, y + 1)).foreach(uf.union(c, _))
       }
       val agg = new scala.collection.mutable.HashMap[
         Long, (Long, Long, Long, Long, Long, Long)]
       rows.foreach { case (c, x, y, v) =>
-        val b = find(c)
+        val b = uf.find(c)
         agg.get(b) match {
           case None => agg(b) = (1L, v, x, x, y, y)
           case Some((nc, vs, x0, x1, y0, y1)) =>

@@ -191,7 +191,7 @@ object SpatialJoins {
       }
     }
     // the first round read the start set eagerly; the results do not
-    startRdds.foreach(_.unpersist(blocking = false))
+    graft.runtime.CheckpointGen.release(startRdds)
     results.getOrElse(
       points.sparkSession.emptyDataFrame
         .withColumn("pid", lit(0L)).withColumn("nn_nid", lit(0L))

@@ -55,6 +55,7 @@ object ConnectedComponents {
       checkpointer: Option[(Int, DataFrame) => DataFrame] = None,
       assumeDistinct: Boolean = false,
       localMaxEdges: Long = LocalMaxEdges): Result = {
+    val gate = graft.runtime.Gate("cc-local", localMaxEdges)
 
     // assumeDistinct: callers holding an already-canonical edge set (the
     // memoised distinct frames, contraction outputs) skip the redundant
@@ -72,7 +73,7 @@ object ConnectedComponents {
     // task, so a single union-find pass replaces the star loop. Durable
     // checkpointers stay iterative (their resume contract is the loop),
     // and a gate of 0 always forces the loop, even on no edges.
-    if (checkpointer.isEmpty && localMaxEdges > 0 && prev._1 <= localMaxEdges)
+    if (checkpointer.isEmpty && gate.admits(prev._1))
       return Result(localLabels(e), 0)
     var done = false
 
@@ -161,13 +162,10 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** Single-task min-label union-find over a (checkpointed) small edge
-    * set — the sub-[[LocalMaxEdges]] path of [[run]]. Pointing the larger
-    * root at the smaller keeps every tree's root = the component minimum,
-    * so labels are bit-identical to the star loop's min-nid fixpoint and
-    * independent of row order (pure function of the edge SET). Lazily
-    * checkpointed: consumers re-read one tiny RDD instead of re-running
-    * the pass per join branch.
+  /** The sub-[[LocalMaxEdges]] path of [[run]]: one single-task
+    * [[Local.MinUnionFind]] over the small edge set, so labels equal the
+    * star loop's min-nid fixpoint. Lazily checkpointed: consumers re-read
+    * one tiny RDD instead of re-running the pass per join branch.
     */
   private def localLabels(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
@@ -175,25 +173,9 @@ object ConnectedComponents {
     e.select(col("src"), col("dst")).as[(Long, Long)]
       .coalesce(1) // narrow (no exchange): the one-task gate is the point
       .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x0: Long): Long = {
-          var r = x0
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var y = x0
-          while (y != r) { val n = parent(y); parent(y) = r; y = n }
-          r
-        }
-        it.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra < rb) parent(rb) = ra
-          else if (rb < ra) parent(ra) = rb
-        }
-        // snapshot keys first: find()'s path compression updates values
-        // (never keys), but don't iterate a map while mutating it
-        val ks = parent.keysIterator.toArray
-        ks.iterator.map(n => (n, find(n)))
+        val uf = new Local.MinUnionFind
+        it.foreach { case (a, b) => uf.union(a, b) }
+        uf.labels
       }
       .toDF("nid", "comp")
       .localCheckpoint(false)

@@ -147,8 +147,7 @@ object DistLongest {
       state = newState
       rounds += 1
     }
-    prevState.foreach(_.unpersist(false))
-    ins.unpersist(false)
+    graft.runtime.CheckpointGen.release(prevState.toSeq :+ ins)
     val out = pendingDeltas.foldLeft(resolvedBase)(_ union _)
       .localCheckpoint(true)
     retained.foreach(_.unpersist(false))

@@ -416,58 +416,34 @@ object DownOps {
     // HYBRID (guide §2.4/§1.2: fewest rounds wins): same-tag components
     // never span an undirected weak component, so callers holding the
     // weak-CC labels of this edge set (memoised elsewhere) localise the
-    // tag-CC to ONE shuffle — a per-weak-component union-find replaces
-    // the iterative composite-key CC's driver rounds, with identical
-    // min-nid labels (the label is a pure function of the component
-    // partition). Weak components above `sizeThreshold` edge rows keep
-    // the distributed path (scale guard, same split as betweenness).
+    // tag-CC to ONE shuffle with identical min-nid labels. Weak
+    // components above `sizeThreshold` edge rows keep the distributed
+    // composite-key CC.
     weakLabels match {
       case None => tagGroupCCDistributed(edges)
       case Some(wl) =>
         val keyed = edges.select(col("src"), col("dst"), col("tag"))
           .join(wl.withColumnRenamed("nid", "src"), Seq("src"))
           .select("comp", "src", "dst", "tag")
-        val big = keyed.groupBy("comp").agg(count(lit(1)).as("ne"))
-          .filter(col("ne") > sizeThreshold)
-          .select("comp").localCheckpoint(true)
-        val anyBig = big.limit(1).count() > 0L
-        val small = if (anyBig) keyed.join(big, Seq("comp"), "left_anti")
-          else keyed
-        val localRes = small
+        val split = graft.runtime.Gate("tag-cc-local", sizeThreshold)
+          .split(keyed, "comp")
+        val localRes = split.small(keyed)
           .as[(Long, Long, Long, Option[String])]
           .groupByKey(_._1)
           .flatMapGroups { (_, rows) =>
             val es = rows.map(r => (r._2, r._3, r._4)).toSeq
-            // min-nid union-find per (tag, node); the control-char
-            // sentinel mirrors the distributed path's null-tag key
-            val sent = "\u0001"
-            val parent =
-              scala.collection.mutable.HashMap.empty[(String, Long), (String, Long)]
-            def find(x: (String, Long)): (String, Long) = {
-              var r = x
-              while (parent.getOrElse(r, r) != r) r = parent(r)
-              var c = x
-              while (parent.getOrElse(c, c) != c) {
-                val n = parent(c); parent(c) = r; c = n
-              }
-              r
-            }
-            es.foreach { case (s0, d0, t) =>
-              val tk = t.getOrElse(sent)
-              val ra = find((tk, s0)); val rb = find((tk, d0))
-              if (ra != rb) {
-                if (ra._2 <= rb._2) parent(rb) = ra else parent(ra) = rb
-              }
-            }
-            es.iterator.map { case (s0, d0, t) =>
-              (s0, d0, t, find((t.getOrElse(sent), s0))._2)
-            }
+            // one union-find per tag; the control-char sentinel mirrors
+            // the distributed path's null-tag key
+            val ufs = scala.collection.mutable.HashMap.empty[String, Local.MinUnionFind]
+            def uf(t: Option[String]) =
+              ufs.getOrElseUpdate(t.getOrElse("\u0001"), new Local.MinUnionFind)
+            es.foreach { case (s0, d0, t) => uf(t).union(s0, d0) }
+            es.iterator.map { case (s0, d0, t) => (s0, d0, t, uf(t).find(s0)) }
           }
           .toDF("src", "dst", "tag", "tag_group_nid")
-        if (!anyBig) localRes
+        if (!split.anyBig) localRes
         else localRes.unionByName(tagGroupCCDistributed(
-          keyed.join(big, Seq("comp"), "left_semi")
-            .select("src", "dst", "tag")))
+          split.big(keyed).select("src", "dst", "tag")))
     }
   }
 

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.runtime.CheckpointGen
+import graft.runtime.{CheckpointGen, Gate}
 
 /** Directed-flow operators (SURVEY.md §2.6): end points, topological
   * frontier propagation of upstream metres with the reference's full
@@ -113,6 +113,9 @@ object Flow {
     (up.toMap, flows.toSeq)
   }
 
+  /** Default limit of the D5/D9 hybrids, in edges per weak component. */
+  val HybridMaxEdges = 1000000L
+
   /** Hybrid D5 (SURVEY §7.5.3): weak-CC the DAG; components under
     * `sizeThreshold` edges run the exact local walk inside
     * `flatMapGroups` (one shuffle, zero driver rounds — river basins are
@@ -122,7 +125,7 @@ object Flow {
     */
   def upstreamFlowHybrid(
       edges: DataFrame,
-      sizeThreshold: Long = 1000000,
+      sizeThreshold: Long = HybridMaxEdges,
       maxRounds: Int = 100000,
       labels: Option[DataFrame] = None): UpstreamResult = {
     val spark = edges.sparkSession
@@ -134,13 +137,9 @@ object Flow {
     val weak = labels.getOrElse(
       ConnectedComponents.run(e0.select("src", "dst")).labels)
     val labelled = e0.join(weak.withColumnRenamed("nid", "src"), Seq("src"))
-    val sizes = labelled.groupBy("comp").agg(count(lit(1)).as("n"))
-    val small = labelled.join(sizes.filter(col("n") <= sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val big = labelled.join(sizes.filter(col("n") > sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
+    val split = Gate("upstream-local", sizeThreshold).split(labelled, "comp")
 
-    val localRes = small
+    val localRes = split.small(labelled)
       .select("comp", "src", "dst", "len", "tag")
       .as[(Long, Long, Long, Double, Option[String])]
       .groupByKey(_._1)
@@ -156,10 +155,10 @@ object Flow {
       .map(r => (r._2, r._3, r._4.orNull, r._5, r._6))
       .toDF("src", "dst", "tag", "len", "flow_m")
 
-    if (big.isEmpty) UpstreamResult(localNodes, localFlows, 0)
+    if (!split.anyBig) UpstreamResult(localNodes, localFlows, 0)
     else {
-      val bigRes = upstreamFlow(big.select("src", "dst", "len", "tag"),
-        maxRounds)
+      val bigRes = upstreamFlow(
+        split.big(labelled).select("src", "dst", "len", "tag"), maxRounds)
       UpstreamResult(
         localNodes.union(bigRes.nodeUpstream),
         localFlows.union(bigRes.edgeFlow),
@@ -348,9 +347,7 @@ object Flow {
       state = newState
       rounds += 1
     }
-    prevState.foreach(_.unpersist(false))
-    pinnedGens.foreach(_.unpersist(false))
-    outs.unpersist(false)
+    CheckpointGen.release(prevState.toSeq ++ pinnedGens :+ outs)
     // `retained` (the per-round emitted frontiers) deliberately stays
     // persisted: the returned delta-log unions read from those RDDs
     UpstreamResult(
@@ -435,7 +432,7 @@ object Flow {
   def biggestEndAssignmentHybrid(
       edges: DataFrame,          // (src, dst)
       endUpstream: DataFrame,    // (nid, upstream_m) for end nodes
-      sizeThreshold: Long = 1000000,
+      sizeThreshold: Long = HybridMaxEdges,
       labels: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -443,9 +440,7 @@ object Flow {
       .localCheckpoint(true)
     val weak = labels.getOrElse(ConnectedComponents.run(e0).labels)
     val labelled = e0.join(weak.withColumnRenamed("nid", "src"), Seq("src"))
-    val sizes = labelled.groupBy("comp").agg(count(lit(1)).as("n"))
-    val smallComps = sizes.filter(col("n") <= sizeThreshold).select("comp")
-    val small = labelled.join(smallComps, Seq("comp"), "left_semi")
+    val split = Gate("biggest-end-local", sizeThreshold).split(labelled, "comp")
     val endsTyped = endUpstream
       .select(col("nid").cast("long"), col("upstream_m").cast("double"))
     val endLab = endsTyped.join(weak, Seq("nid"))
@@ -454,27 +449,24 @@ object Flow {
     val orphanEnds = endsTyped.join(weak, Seq("nid"), "left_anti")
       .groupBy("nid").agg(max("upstream_m").as("end_upstream_m"))
       .select(col("nid"), col("nid").as("end_nid"), col("end_upstream_m"))
-    val smallEnds = endLab.join(smallComps, Seq("comp"), "left_semi")
-    val localRes = small
+    // every labelled end's comp has an edge in `labelled` (its label
+    // came from an edge of this weak-CC), so the ends split the same way
+    val localRes = split.small(labelled)
       .select("comp", "src", "dst")
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
-      .cogroup(smallEnds.select("comp", "nid", "upstream_m")
+      .cogroup(split.small(endLab).select("comp", "nid", "upstream_m")
         .as[(Long, Long, Double)].groupByKey(_._1)) { (_, es0, ends0) =>
         val es = es0.map(r => (r._2, r._3)).toSeq
         val ends = ends0.map(r => (r._2, r._3)).toSeq
         biggestEndLocal(es, ends).iterator
       }
       .toDF("nid", "end_nid", "end_upstream_m")
-    val bigComps = sizes.filter(col("n") > sizeThreshold).select("comp")
     val smallSide = localRes.unionByName(orphanEnds)
-    if (bigComps.isEmpty) smallSide
-    else {
-      val big = labelled.join(bigComps, Seq("comp"), "left_semi")
-      val bigEnds = endLab.join(bigComps, Seq("comp"), "left_semi")
-      smallSide.unionByName(biggestEndAssignment(
-        big.select("src", "dst"), bigEnds.select("nid", "upstream_m")))
-    }
+    if (!split.anyBig) smallSide
+    else smallSide.unionByName(biggestEndAssignment(
+      split.big(labelled).select("src", "dst"),
+      split.big(endLab).select("nid", "upstream_m")))
   }
 
   def biggestEndAssignment(
@@ -596,10 +588,7 @@ object Flow {
     // `out` is eagerly materialized above — every retained generation
     // (rotation tail, durable reload, pinned local checkpoints, the
     // static edge set) can now release its executor storage
-    eByDst.unpersist(false)
-    prevMerged.foreach(_.unpersist(false))
-    prevDurable.foreach(_.unpersist(false))
-    pinnedGens.foreach(_.unpersist(false))
+    CheckpointGen.release(Seq(eByDst) ++ prevMerged ++ prevDurable ++ pinnedGens)
     out
   }
 }

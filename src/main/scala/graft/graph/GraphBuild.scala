@@ -294,13 +294,9 @@ object GraphBuild {
       least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst"))
       .localCheckpoint(true)
-    val sizes = e0.groupBy("comp").agg(count(lit(1)).as("n"))
-    val bigComps = sizes.filter(col("n") > localPerCompMax)
-      .select("comp").localCheckpoint(true)
-    val anyBig = bigComps.limit(1).count() > 0L
-    val smallE =
-      if (anyBig) e0.join(bigComps, Seq("comp"), "left_anti") else e0
-    val localRes = smallE
+    val split = graft.runtime.Gate("compress-local", localPerCompMax)
+      .split(e0, "comp")
+    val localRes = split.small(e0)
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (comp, rows) =>
@@ -310,9 +306,8 @@ object GraphBuild {
         (comp, compressed.flatMap(e => Seq(e._1, e._2)).distinct.size.toLong)
       }
       .toDF("comp", "num_nodes")
-    if (!anyBig) return localRes
-    localRes.unionByName(
-      compressedNumNodesDist(e0.join(bigComps, Seq("comp"), "left_semi")))
+    if (!split.anyBig) localRes
+    else localRes.unionByName(compressedNumNodesDist(split.big(e0)))
   }
 
   /** The distributed closed form over pre-canonicalized (comp, src, dst)

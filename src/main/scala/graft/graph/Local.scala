@@ -40,6 +40,34 @@ object Local {
     buf.toSeq
   }
 
+  /** Min-root union-find: the larger root always points at the smaller,
+    * so every set's root is its minimum member whatever the union order
+    * (the min-nid labels of [[ConnectedComponents]]'s star loop). */
+  final class MinUnionFind {
+    private val parent = mutable.LongMap.empty[Long]
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val n = parent(y); parent(y) = r; y = n }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
+    }
+
+    /** (id, root) for every id passed to [[union]]; the keys are copied
+      * first because `find` compresses paths (values, never keys). */
+    def labels: Iterator[(Long, Long)] =
+      parent.keysIterator.toArray.iterator.map(n => (n, find(n)))
+  }
+
   /** Sorted undirected adjacency (BTreeMap-order parity: the reference
     * iterates neighbours in sorted order, which fixes MultiLineString part
     * order — /root/reference/src/graph/undirected_graph.rs:186-190).

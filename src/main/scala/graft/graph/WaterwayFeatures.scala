@@ -343,14 +343,12 @@ object WaterwayFeatures {
     val bProps = spark.sparkContext.broadcast(propsByKey)
     val minLen = minLengthM
 
-    // hybrid gate: group edge counts route small → exact single-task
-    // walk, big → the contraction scale path
-    val sizes = e.groupBy("gkey").agg(count(lit(1)).as("n"))
-    val bigKeys = sizes.filter(col("n") > sizeThreshold).select("gkey")
-    val small = e.join(bigKeys, Seq("gkey"), "left_anti")
+    // small groups take the exact single-task walk, big ones the
+    // contraction scale path
+    val split = graft.runtime.Gate("d16-local", sizeThreshold).split(e, "gkey")
 
     // ---- distributed per-group geometry + local stats ------------------
-    val localRes = small.join(n1, Seq("src")).join(n2, Seq("dst"))
+    val localRes = split.small(e).join(n1, Seq("src")).join(n2, Seq("dst"))
       .select(col("gkey"), col("src"), col("dst"), col("flow"), col("len"),
         col("slat"), col("slon"), col("dlat"), col("dlon"))
       .as[(String, Long, Long, Double, Double, Double, Double, Double, Double)]
@@ -433,9 +431,12 @@ object WaterwayFeatures {
       }
       .toDF("gkey", "feature")
 
-    if (bigKeys.isEmpty) localRes
+    // the local side's node joins drop ghost-endpoint edges; so does this
+    if (!split.anyBig) localRes
     else localRes.unionByName(groupedFeaturesAtScale(
-      e.join(bigKeys, Seq("gkey"), "left_semi")
+      split.big(e)
+        .join(n1.select("src"), Seq("src"), "left_semi")
+        .join(n2.select("dst"), Seq("dst"), "left_semi")
         .select("gkey", "src", "dst", "len", "flow"),
       nodes, bProps, minLen, spark))
   }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{ConnectedComponents, Local, LocalPaths}
+import graft.runtime.Gate
 
 /** Per-component optional outputs of the undirected engine: frames (P6),
   * betweenness (P8), and the directed longest source→mouth (D17).
@@ -44,10 +45,8 @@ object Extras {
     val lab = labelled(edges, nodes)
       .select("comp", "src", "dst", "lat1", "lon1", "lat2", "lon2")
       .localCheckpoint(true)
-    val sizes = lab.groupBy("comp").agg(count(lit(1)).as("n"))
-    val small = lab.join(sizes.filter(col("n") <= sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val localRes = small
+    val split = Gate("frames-local", sizeThreshold).split(lab, "comp")
+    val localRes = split.small(lab)
       .as[(Long, Long, Long, Double, Double, Double, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (comp, rows) =>
@@ -58,10 +57,8 @@ object Extras {
           .zipWithIndex.map { case (line, i) => (comp, i, line) }
       }
       .toDF("comp", "line_idx", "line")
-    val bigComps = sizes.filter(col("n") > sizeThreshold).select("comp")
-    if (bigComps.isEmpty) localRes
-    else localRes.unionByName(framesAtScale(
-      lab.join(bigComps, Seq("comp"), "left_semi"), nodes, spark))
+    if (!split.anyBig) localRes
+    else localRes.unionByName(framesAtScale(split.big(lab), nodes, spark))
   }
 
   /** The frames scale path over pre-labelled big-component edges
@@ -190,25 +187,18 @@ object Extras {
     // midpoints) — a documented deviation reachable only above the
     // threshold, where the round-4 code failed loudly instead of
     // answering (README deviations list).
-    // ONE canonical distinct, shared: the size gate reads it, and the
-    // scale path feeds it straight into DistContract (which would
-    // otherwise redo the same least/greatest+distinct+checkpoint).
-    // bigGroups is checkpointed because it is read three times (size
-    // gate action, local anti-join, scale semi-join) — uncheckpointed it
-    // re-derived the distinct+groupBy once per consumer.
+    // ONE canonical distinct, shared: the size gate counts its non-loop
+    // edges, and the scale path feeds it straight into DistContract
+    // (which would otherwise redo the same least/greatest+distinct+
+    // checkpoint).
     val canonAll = e0.select(col("comp"),
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct().localCheckpoint(true)
-    val canonE = canonAll.filter(col("a") =!= col("b"))
-    val bigGroups = canonE.groupBy("comp").agg(count(lit(1)).as("ne"))
-      .filter(col("ne") > sizeThreshold)
-      .select("comp").localCheckpoint(true)
-    val anyBig = bigGroups.limit(1).count() > 0L
-    val localEdges =
-      if (anyBig) e0.join(bigGroups, Seq("comp"), "left_anti") else e0
+    val split = Gate("betweenness-local", sizeThreshold)
+      .split(canonAll.filter(col("a") =!= col("b")), "comp")
 
-    val localRes = localEdges
+    val localRes = split.small(e0)
       .join(nodes.select(col("nid").as("src"), col("lat").as("lat1"),
         col("lon").as("lon1")), Seq("src"))
       .join(nodes.select(col("nid").as("dst"), col("lat").as("lat2"),
@@ -238,12 +228,15 @@ object Extras {
       .toDF("comp", "src", "dst", "chain", "value", "value_fraction",
         "value_fraction_max", "comp_max_value")
 
-    if (!anyBig) localRes
+    // the local side's node joins drop ghost-endpoint edges; so does this
+    if (!split.anyBig) localRes
     else localRes.unionByName(betweennessAtScale(
-      canonAll.join(bigGroups, Seq("comp"), "left_semi")
+      split.big(canonAll)
+        .join(nodes.select(col("nid").as("a")), Seq("a"), "left_semi")
+        .join(nodes.select(col("nid").as("b")), Seq("b"), "left_semi")
         .select(col("comp"), col("a").as("src"), col("b").as("dst")),
       nodes, spark, maxSamples, minValue, minFraction,
-      bigGroupsOpt = Some(bigGroups)))
+      bigGroupsOpt = Some(split.bigKeys)))
   }
 
   /** Steps 2-5 of the reference betweenness pipeline over an already
@@ -502,12 +495,8 @@ object Extras {
     val weak = labels.getOrElse(
       ConnectedComponents.run(e0.select("src", "dst")).labels)
     val labelled = e0.join(weak.withColumnRenamed("nid", "src"), Seq("src"))
-    val sizes = labelled.groupBy("comp").agg(count(lit(1)).as("n"))
-    val big = labelled.join(sizes.filter(col("n") > sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val small = labelled.join(sizes.filter(col("n") <= sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val localRes = small
+    val split = Gate("d17-local", sizeThreshold).split(labelled, "comp")
+    val localRes = split.small(labelled)
       .select("comp", "src", "dst", "len")
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
@@ -536,9 +525,9 @@ object Extras {
         }
       }
       .toDF("mouth", "source", "dist_m", "path")
-    if (big.isEmpty) localRes
+    if (!split.anyBig) localRes
     else localRes.unionByName(
       graft.graph.DistLongest.longestSourceMouth(
-        big.select("src", "dst", "len"), spark))
+        split.big(labelled).select("src", "dst", "len"), spark))
   }
 }

@@ -241,13 +241,9 @@ object LumpWays {
     // unshardable, so it always takes the single-task path
     val shardAt =
       if (cfg.splitIntoSinglePaths) Long.MaxValue else cfg.shardThresholdEdges
-    val bigComps = keptEdges.groupBy("comp").agg(count(lit(1)).as("ne"))
-      .filter(col("ne") > shardAt)
-      .select("comp").localCheckpoint(true)
-    val anyBig = bigComps.limit(1).count() > 0L
-    val smallEdges =
-      if (anyBig) keptEdges.join(bigComps, Seq("comp"), "left_anti") else keptEdges
-    val chain = smallEdges
+    val split = graft.runtime.Gate("lump-shard", shardAt).split(keptEdges, "comp")
+    val bigEdges = split.big(keptEdges)
+    val chain = split.small(keptEdges)
       .withColumn("chain", concat(array(col("src")), col("inter"), array(col("dst"))))
       .select(col("comp"), col("src"), col("dst"), posexplode(col("chain")).as(Seq("pos", "nid")))
       .join(nodes, Seq("nid"))
@@ -314,8 +310,7 @@ object LumpWays {
     // LineString feature carrying the group props — the documented scale
     // deviation from the one-MultiLineString-per-group shape (whose
     // single row is itself O(component))
-    val geoms = if (!anyBig) geomsSmall else {
-      val bigEdges = keptEdges.join(bigComps, Seq("comp"), "left_semi")
+    val geoms = if (!split.anyBig) geomsSmall else {
       val perEdge = bigEdges
         .withColumn("chain", concat(array(col("src")), col("inter"), array(col("dst"))))
         .select(col("comp"), col("src"), col("dst"),
@@ -363,10 +358,9 @@ object LumpWays {
         .distinct()
       val smallVerts = geoms
         .select(col("comp"), explode(col("vertices")).as("nid"))
-      val bigVerts = if (!anyBig) smallVerts.limit(0) else {
-        val be = keptEdges.join(bigComps, Seq("comp"), "left_semi")
-        be.select(col("comp"), col("src").as("nid"))
-          .union(be.select(col("comp"), col("dst").as("nid")))
+      val bigVerts = if (!split.anyBig) smallVerts.limit(0) else {
+        bigEdges.select(col("comp"), col("src").as("nid"))
+          .union(bigEdges.select(col("comp"), col("dst").as("nid")))
           .groupBy("comp", "nid").agg(count(lit(1)).as("d"))
           .filter(col("d") =!= 2).select("comp", "nid")
       }

@@ -181,7 +181,7 @@ object Derived {
         case null =>
           val (v, rdds) = graft.runtime.CheckpointGen.persisted(
             SparkSession.active.sparkContext)(build)
-          entries.put(key, (v, () => { rdds.foreach(_.unpersist(blocking = false)); release(v) }))
+          entries.put(key, (v, () => { graft.runtime.CheckpointGen.release(rdds); release(v) }))
           v
         case (v, _) => v.asInstanceOf[T]
       }

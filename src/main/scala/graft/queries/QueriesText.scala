@@ -33,7 +33,7 @@ object QueriesText {
 
   /** The suffix-array frame q109/q110 share. At cap=128 the ranking is
     * ONE range exchange sorting the windows themselves
-    * (SuffixArray.DirectSortCap), so the win payload already rode the
+    * (the `suffix-direct` gate), so the win payload already rode the
     * only exchange — one full frame (doc_id, pos, win, sa_rank) serves
     * q109 (projection, no join) and q110 (adjacent-LCP, no rank⋈window
     * join either).

@@ -37,7 +37,7 @@ final class CheckpointGen {
       CheckpointGen.persisted(df.sparkSession.sparkContext)(df.localCheckpoint(true))
     val stale = live
     live = created
-    stale.foreach(_.unpersist(blocking = false))
+    CheckpointGen.release(stale)
     out
   }
 }
@@ -68,4 +68,9 @@ object CheckpointGen {
     val v = body
     (v, sc.getPersistentRDDs.filter(kv => !before(kv._1)).values.toList)
   }
+
+  /** Drop the blocks of `rdds`, locally checkpointed ones without
+    * `RDD.unpersist`'s WARN (see `GraftRddBridge`). */
+  def release(rdds: Seq[RDD[_]], blocking: Boolean = false): Unit =
+    rdds.foreach(org.apache.spark.rdd.GraftRddBridge.release(_, blocking))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{CommonPrefixLen, PackedPrefix8, SuffixExprs}
-import graft.runtime.{CheckpointGen, Ranks}
+import graft.runtime.{CheckpointGen, Gate, Ranks}
 
 /** Distributed suffix array + adjacent-suffix LCP — the ExactSubstr
   * dedup machinery of "Deduplicating Training Data Makes Language
@@ -203,7 +203,7 @@ object SuffixArray {
     * locally. Doubling remains the scale shape for larger caps, where
     * O(n·cap) exchange bytes overtake O(n·log(cap/8)·24 B).
     */
-  private val DirectSortCap = 128
+  private val DirectSort = Gate("suffix-direct", 128L)
 
   /** The full suffix array with its comparison windows:
     * (doc_id, pos, sa_rank, win) — sa_rank is the global 1-based
@@ -215,7 +215,7 @@ object SuffixArray {
       docs: DataFrame, idCol: String, textCol: String,
       cap: Int = 128): DataFrame = {
     val wins = windows(docs, idCol, textCol, cap).localCheckpoint(true)
-    if (cap <= DirectSortCap) {
+    if (DirectSort.admits(cap)) {
       // the two-phase row number preserves the win column — no join back
       lastDoublingRounds.set(0)
       Ranks.withGlobalRowNumber(wins,
@@ -226,12 +226,13 @@ object SuffixArray {
   /** The rank side alone from a (checkpointed) [[windows]] frame:
     * (doc_id, pos, sa_rank). Callers that only need ranks (q109) drop
     * the O(n·cap) win payload right after the one ranking exchange.
-    * `forceDoubling` is the spec hook pinning direct ≡ doubling ranks.
+    * `directSortMax` 0 forces the doubling loop (specs pin direct ≡
+    * doubling ranks that way).
     */
   def rankWindows(
       wins: DataFrame, cap: Int = 128,
-      forceDoubling: Boolean = false): DataFrame = {
-    if (cap <= DirectSortCap && !forceDoubling) {
+      directSortMax: Long = DirectSort.limit): DataFrame = {
+    if (DirectSort.copy(limit = directSortMax).admits(cap)) {
       lastDoublingRounds.set(0)
       return Ranks.withGlobalRowNumber(wins,
           Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
@@ -268,14 +269,14 @@ object SuffixArray {
     * self-join (two more full-frame exchanges + sorts of the window
     * payload) disappears; partition-boundary pairs are patched from the
     * same O(#partitions) driver stats that chain the rank offsets.
-    * Requires cap ≤ [[DirectSortCap]] (the doubling path has no single
+    * Requires cap ≤ [[DirectSort]]'s limit (the doubling path has no single
     * sorted scan to read pairs from).
     */
   def saWithAdjacent(
       docs: DataFrame, idCol: String, textCol: String,
       cap: Int = 128): DataFrame = {
-    require(cap <= DirectSortCap,
-      s"saWithAdjacent needs the direct-sort path (cap <= $DirectSortCap)")
+    require(DirectSort.admits(cap),
+      s"saWithAdjacent needs the direct-sort path (cap <= ${DirectSort.limit})")
     lastDoublingRounds.set(0)
     val wins = windows(docs, idCol, textCol, cap).localCheckpoint(true)
     val order = Seq(col("win").asc, col("doc_id").asc, col("pos").asc)

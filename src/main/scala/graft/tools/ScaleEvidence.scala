@@ -566,7 +566,7 @@ object ScaleEvidence {
     * caller may stop the session next). */
   private def released[T](spark: SparkSession)(body: => T): T = {
     val (v, made) = CheckpointGen.persisted(spark.sparkContext)(body)
-    made.foreach(_.unpersist(blocking = true))
+    CheckpointGen.release(made, blocking = true)
     v
   }
 

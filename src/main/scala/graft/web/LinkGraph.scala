@@ -79,8 +79,7 @@ object LinkGraph {
     * local union-find). The node count gates first (a cheap count) so
     * an at-scale caller never pays the edge-count scan.
     */
-  private val LocalMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_WEB_LOCAL_MAX").map(_.toLong).getOrElse(500000L)
+  val LocalMaxEdges = 500000L
 
   /** The one-partition tagged (nodes ++ edges) dataset the local paths
     * replay from — None when the graph is above the gate. Rows:
@@ -92,11 +91,9 @@ object LinkGraph {
       : Option[org.apache.spark.sql.Dataset[(Boolean, Long, Long)]] = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    // bounded counts: an at-scale frame is read only up to the gate, and
     // the edges are checkpointed only once the local path is taken
-    def over(df: DataFrame) =
-      df.limit(math.min(localMax, Int.MaxValue - 1L).toInt + 1).count() > localMax
-    if (localMax < 0 || over(nodes) || over(edges)) return None
+    val gate = graft.runtime.Gate("web-local", localMax)
+    if (!gate.admits(nodes) || !gate.admits(edges)) return None
     val e0 = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .localCheckpoint(true)

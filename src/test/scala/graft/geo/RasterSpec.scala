@@ -55,4 +55,17 @@ class RasterSpec extends AnyFunSuite with SparkTestBase {
     val iso = blobs(CellIndex.pack(1, 3, res))
     assert(iso._1 == 1L && iso._2 == 2L)
   }
+
+  test("vectorize: driver union-find ≡ tile-adjacency CC (raster gate 0)") {
+    // the same grid, plus a vertical pair; gate 0 forces the distributed
+    // adjacency joins + ConnectedComponents.run
+    val cells = Seq((0L, 1L, 2L), (3L, 1L, 3L), (1L, 3L, 2L), (2L, 2L, 1L),
+      (2L, 0L, 4L), (2L, 1L, 5L))
+      .map { case (x, y, v) => (CellIndex.pack(x, y, res), x, y, v) }
+      .toDF("cell", "x", "y", "v")
+    def blobs(gate: Long) = Raster.vectorize(cells, 2L, res, driverMaxRes = gate)
+      .collect().map(_.toSeq).toSet
+    assert(blobs(0L) == blobs(10L))
+    assert(blobs(0L).size == 2)
+  }
 }

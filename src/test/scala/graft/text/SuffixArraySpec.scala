@@ -134,7 +134,7 @@ class SuffixArraySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("direct sort ranks == prefix-doubling ranks (forceDoubling hook)") {
+  test("direct sort ranks == prefix-doubling ranks (direct-sort gate 0)") {
     // the cap<=128 fast path sorts the window itself in one range
     // exchange; the doubling loop must produce the same total order —
     // pinned on the adversarial fixture AND a seeded random corpus with
@@ -151,7 +151,7 @@ class SuffixArraySpec extends AnyFunSuite with SparkTestBase {
       def m(dfr: org.apache.spark.sql.DataFrame) = dfr.collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
       val direct = m(SuffixArray.rankWindows(w, c))
-      val doubled = m(SuffixArray.rankWindows(w, c, forceDoubling = true))
+      val doubled = m(SuffixArray.rankWindows(w, c, directSortMax = 0L))
       assert(direct == doubled, s"cap=$c corpus=${corpus.head._1}")
     }
   }

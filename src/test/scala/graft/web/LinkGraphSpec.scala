@@ -22,16 +22,16 @@ class LinkGraphSpec extends AnyFunSuite with SparkTestBase {
       .filter(e => e._1 != e._2).toDF("src", "dst")
     def m(df: DataFrame) = df.collect()
       .map(r => r.toSeq.head -> r.toSeq.tail).toMap
-    // localMaxEdges = -1 forces the distributed loop; default localises
+    // localMaxEdges = 0 forces the distributed loop; default localises
     assert(m(LinkGraph.kcorePeel(nodes, edges, 3, 4)) ==
-      m(LinkGraph.kcorePeel(nodes, edges, 3, 4, localMaxEdges = -1L)))
+      m(LinkGraph.kcorePeel(nodes, edges, 3, 4, localMaxEdges = 0L)))
     assert(m(LinkGraph.labelPropagation(nodes, edges, 3)) ==
-      m(LinkGraph.labelPropagation(nodes, edges, 3, localMaxEdges = -1L)))
+      m(LinkGraph.labelPropagation(nodes, edges, 3, localMaxEdges = 0L)))
     assert(m(LinkGraph.bfsDepth(nodes, edges, 7L, 3)) ==
-      m(LinkGraph.bfsDepth(nodes, edges, 7L, 3, localMaxEdges = -1L)))
+      m(LinkGraph.bfsDepth(nodes, edges, 7L, 3, localMaxEdges = 0L)))
     assert(m(LinkGraph.hyperBallRegisters(nodes, edges, 16, 2)) ==
       m(LinkGraph.hyperBallRegisters(nodes, edges, 16, 2,
-        localMaxEdges = -1L)))
+        localMaxEdges = 0L)))
   }
 
   test("triangleCounts: K4 + pendant + isolated node, exact counts and cc") {
