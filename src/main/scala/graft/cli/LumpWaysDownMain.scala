@@ -212,7 +212,6 @@ object LumpWaysDownMain {
 
       lazy val assignment = Flow.biggestEndAssignment(
         contracted.select("src", "dst"), ends)
-        .localCheckpoint(true)
       lazy val endMeta = assignment
         .filter(col("nid") === col("end_nid"))
         .select(col("end_nid"), col("end_upstream_m"))

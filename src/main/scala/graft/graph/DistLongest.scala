@@ -2,22 +2,12 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed D17 — longest source→mouth for components too large for
-  * one task (the last whole-group loud guards of round 4 include
-  * `Local.boundedSeq` in `Extras.longestSourceMouth`).
-  *
-  * The reference (/root/reference/src/longest_source_mouth.rs:45-315)
-  * runs, per mouth, a Dijkstra flood UPSTREAM over the reversed DAG and
-  * keeps the max-shortest-distance source plus its path. On a DAG the
-  * Dijkstra distances are exactly the topological-order DP
-  *   d_m(v) = min over out-edges (v→h) of d_m(h) + len,
-  * so the distributed form is the SAME topo-countdown frontier loop as
-  * [[Flow.upstreamFlow]] (a node finalizes when all its out-heads have),
-  * carrying per-mouth (dist, parent, hops) state instead of flow sums:
-  * append-only per-round result deltas, one frontier-sized shuffle per
-  * round, co-partitioned narrow state updates.
+  * one task. On a DAG the reference's per-mouth upstream Dijkstra
+  * distances are the topological DP d_m(v) = min over out-edges (v→h) of
+  * d_m(h) + len, which [[mouthDistances]] runs as a [[Frontier]]
+  * countdown over the reversed edges. This object owns the rest:
   *
   * Tie parity with [[Local.dijkstra]]: the local heap pops in
   * (dist, node) order and relaxes with strict `<`, so among predecessors
@@ -39,119 +29,37 @@ object DistLongest {
   // finalized per-mouth record of a node: (mouth, dist, parent: -1 = none, hops)
   private type Final = (Long, Double, Long, Long)
 
+  // per-mouth min-merge with Local.dijkstra's tie rule; a ready node
+  // with no arrivals has out-degree 0 — it IS a mouth
+  private def settle(nid: Long, arrivals: List[Arrival]): List[Final] =
+    if (arrivals.isEmpty) List((nid, 0.0, -1L, 0L))
+    else arrivals.groupBy(_._1).valuesIterator.map { as =>
+      val best = as.minBy(a => (a._2, a._3, a._4))
+      (best._1, best._2, best._4, best._5 + 1L)
+    }.toList
+
   /** Per-node, per-reachable-mouth shortest distance toward that mouth:
-    * (nid, mouth, dist, parent nullable, hops). Requires a DAG — stalls
-    * loudly on cycles (contract SCCs first, as the down pipeline does).
+    * (nid, mouth, dist, parent nullable, hops). Requires a DAG — throws
+    * on cycles (contract SCCs first, as the down pipeline does). Each
+    * edge pushes its head's per-mouth records to its tail.
     */
-  def mouthDistances(edges: DataFrame, maxRounds: Int = 100000): DataFrame = {
+  def mouthDistances(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    import org.apache.spark.HashPartitioner
-
-    val e0 = edges.select(
-      col("src").cast("long"), col("dst").cast("long"),
-      col("len").cast("double")).localCheckpoint(true)
-    val eRdd = e0.as[(Long, Long, Double)].rdd
-
-    val eCount = e0.count()
-    val nParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
-      eCount / 100000L + 1L)).toInt
-    val part = new HashPartitioner(nParts)
-
-    // static in-edge lists keyed by HEAD (push targets when head finals)
-    val ins = eRdd.map { case (s, d, l) => (d, (s, l)) }
-      .groupByKey(part).mapValues(_.toArray)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // countdown = out-degree (a node finalizes when all out-heads have)
-    val outdeg = eRdd.map { case (s, _, _) => (s, 1L) }.reduceByKey(part, _ + _)
-    val allNodes = eRdd.flatMap { case (s, d, _) => Iterator(s, d) }
-      .map((_, ())).reduceByKey(part, (a, _) => a)
-    var state = allNodes.leftOuterJoin(outdeg)
-      .mapValues { case (_, deg) => (deg.getOrElse(0L), List.empty[Arrival]) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val totalNodes = state.count()
-
-    // per-mouth min-merge with Local.dijkstra's tie rule; a ready node
-    // with no arrivals has out-degree 0 — it IS a mouth
-    def finalize(nid: Long, arrivals: List[Arrival]): List[Final] =
-      if (arrivals.isEmpty) List((nid, 0.0, -1L, 0L))
-      else arrivals.groupBy(_._1).valuesIterator.map { as =>
-        val best = as.minBy(a => (a._2, a._3, a._4))
-        (best._1, best._2, best._4, best._5 + 1L)
-      }.toList
-
-    var resolvedBase = Seq.empty[(Long, Long, Double, Option[Long], Long)]
-      .toDF("nid", "mouth", "dist", "parent", "hops")
-    val pendingDeltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def appendDelta(df: DataFrame): Unit = {
-      pendingDeltas += df
-      if (pendingDeltas.length >= 64) {
-        resolvedBase = pendingDeltas.foldLeft(resolvedBase)(_ union _)
-          .localCheckpoint(true)
-        pendingDeltas.clear()
-      }
-    }
-
-    val retained = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    var prevState: Option[org.apache.spark.rdd.RDD[_]] = None
-    var rounds = 0
-    var doneCount = 0L
-    var nReady = state.filter(_._2._1 == 0L).count()
-
-    while (doneCount < totalNodes && rounds < maxRounds) {
-      if (nReady == 0 && doneCount < totalNodes)
-        throw new IllegalStateException(
-          s"mouth-distance propagation stalled after $rounds rounds — " +
-            "graph has a cycle (contract SCCs first)")
-      val emitted = state.filter(_._2._1 == 0L)
-        .mapPartitions(_.map { case (nid, (_, arr)) =>
-          (nid, finalize(nid, arr))
-        }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      retained += emitted
-
-      appendDelta(emitted.flatMap { case (nid, ds) =>
-        ds.map { case (m, dist, p, hops) =>
-          (nid, m, dist, if (p < 0) None else Some(p), hops)
-        }
-      }.toDF("nid", "mouth", "dist", "parent", "hops"))
-
-      // the round's only shuffle: push to upstream tails (one decrement
-      // per in-edge, one entry per in-edge × mouth of the head)
-      val arrivals = emitted.join(ins) // narrow: shared partitioner
-        .flatMap { case (v, (ds, inEdges)) =>
-          inEdges.iterator.map { case (w, len) =>
-            (w, (1L, ds.map { case (m, dist, _, hops) =>
-              (m, dist + len, dist, v, hops): Arrival
-            }))
-          }
-        }
-        .aggregateByKey((0L, List.empty[Arrival]), part)(
-          (a, e) => (a._1 + e._1, e._2 ::: a._2),
-          (a, b) => (a._1 + b._1, a._2 ::: b._2))
-
-      val newState = state.filter(_._2._1 > 0L)
-        .leftOuterJoin(arrivals)
-        .mapValues {
-          case ((pend, acc), Some((n, es))) => (pend - n, es ::: acc)
-          case ((pend, acc), None)          => (pend, acc)
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (rounds % 30 == 29) newState.localCheckpoint()
-      doneCount += nReady
-      nReady = newState.filter(_._2._1 == 0L).count()
-      prevState.foreach(_.unpersist(false))
-      prevState = Some(newState)
-      state = newState
-      rounds += 1
-    }
-    graft.runtime.CheckpointGen.release(prevState.toSeq :+ ins)
-    val out = pendingDeltas.foldLeft(resolvedBase)(_ union _)
-      .localCheckpoint(true)
-    retained.foreach(_.unpersist(false))
-    out
+    val reversed = edges.select(
+        col("dst").cast("long"), col("src").cast("long"), col("len").cast("double"))
+      .as[(Long, Long, Double)].rdd
+    Frontier.run[Double, List[Arrival], (Long, Long, Double, Option[Long], Long)](
+        spark, "mouth distances", reversed,
+        Seq("nid", "mouth", "dist", "parent", "hops")) { (v, arrived, ins) =>
+      val ds = settle(v, arrived.flatten)
+      (ds.map { case (m, dist, p, hops) =>
+          (v, m, dist, if (p < 0) None else Some(p), hops)
+        },
+        ins.map { case (_, len) =>
+          ds.map { case (m, dist, _, hops) => (m, dist + len, dist, v, hops): Arrival }
+        })
+    }.rows
   }
 
   /** Distributed D17 basin output, same schema and values as the local

@@ -252,8 +252,8 @@ object Derived {
     * upstreams (the tie-break the q39/q48 oracles rank on), memoised and
     * shared by both queries. Hybrid engine with the memoised CC labels:
     * small components run the exact local DP in one shuffle
-    * (comparison-only propagation — bit-identical to the Pregel
-    * fixpoint), zero driver rounds.
+    * (comparison-only propagation — bit-identical to the distributed
+    * frontier sweep), zero driver rounds.
     */
   def dagEndAssignmentDm(spark: SparkSession, dir: String): DataFrame =
     memoize(s"assigndm:$dir") {

@@ -18,8 +18,8 @@ import org.apache.spark.sql.DataFrame
   * concurrent checkpoints land in the `before` snapshot and are never
   * claimed) and releases the superseded generation once the new one is
   * fully materialized, keeping resident state at O(1) generations —
-  * the same rotation the RDD loops in `Flow`/`DistLongest` do with
-  * explicit `unpersist`.
+  * the same rotation `graph.Frontier` does for its RDD state with
+  * explicit releases.
   *
   * The LAST rotated generation stays persisted (it IS the loop's
   * result); frames checkpointed outside this instance are untouched.

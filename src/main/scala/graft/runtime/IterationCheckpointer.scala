@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Durable per-round iteration state (north rule: resumable from
   * checkpoint with per-partition lineage + metrics).
   *
-  * Each round of an iterative job (CC label rounds, upstream-propagation
-  * frontiers) writes its full state as parquet under
+  * Each round of an iterative job (CC label rounds, `graph.Frontier`
+  * deltas) writes its state as parquet under
   * `dir/round=NNNNN/` plus a `_METRICS.json` (row count, per-partition
   * counts, a content fingerprint). A round directory is only considered
   * complete once `_METRICS.json` exists — parquet `_SUCCESS` alone is not
@@ -42,10 +42,10 @@ final class IterationCheckpointer(spark: SparkSession, dir: String) {
   }
 
   /** Union of EVERY complete round — the resume read for operators whose
-    * rounds are append-only DELTAS (e.g. `Flow.upstreamFlow`'s resolved
-    * log writes one frontier-sized delta per round), as opposed to
-    * [[latestComplete]] for operators that persist the full state each
-    * round (connected components, biggest-end). Returns the newest
+    * rounds are append-only DELTAS (every `graph.Frontier` sweep —
+    * upstream flow, biggest-end — writes one frontier-sized delta per
+    * round), as opposed to [[latestComplete]] for operators that persist
+    * the full state each round (connected components). Returns the newest
     * complete round index plus one frame scanning all complete rounds.
     */
   def allComplete(): Option[(Int, DataFrame)] = {

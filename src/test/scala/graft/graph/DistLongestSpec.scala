@@ -73,6 +73,12 @@ class DistLongestSpec extends AnyFunSuite with SparkTestBase {
     assert(both == run(es, threshold = 0L))
   }
 
+  test("mouthDistances rejects cycles") {
+    val e = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 2L, 1.0), (3L, 4L, 1.0))
+      .toDF("src", "dst", "len")
+    intercept[IllegalStateException] { DistLongest.mouthDistances(e) }
+  }
+
   test("pathPositions unrolls a known chain") {
     val resolved = Seq(
       (5L, 9L, 0.0, None: Option[Long], 0L),

@@ -274,8 +274,8 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // a chain of n nodes runs n rounds with a 1-node frontier; if any
     // per-round step re-shuffled the PENDING state (as the old `acc`
     // frame semi-join did), total shuffle records would be Ω(n²) — the
-    // co-partitioned loop's only per-round shuffle is the frontier push,
-    // so the total must stay O(n)
+    // frontier's only per-round shuffle is its push, so the total must
+    // stay O(n) for every operator that runs on it
     val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
@@ -285,23 +285,45 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     val n = 300
-    val e = (1 until n).map(i => (i.toLong, (i + 1).toLong, 1.0))
+    val chain = (1 until n).map(i => (i.toLong, (i + 1).toLong, 1.0))
       .toDF("src", "dst", "len")
-      .withColumn("tag", org.apache.spark.sql.functions.lit(null).cast("string"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = Flow.upstreamFlow(e)
-      r.nodeUpstream.count()
-      r.edgeFlow.count()
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(2000)
-      assert(r.rounds == n)
+    val runs: Seq[(String, () => Unit)] = Seq(
+      "upstream" -> { () =>
+        val r = Flow.upstreamFlow(chain.withColumn("tag", lit(null).cast("string")))
+        r.nodeUpstream.count()
+        r.edgeFlow.count()
+        assert(r.rounds == n)
+      },
+      "mouth distances" -> { () =>
+        assert(DistLongest.mouthDistances(chain).count() == n)
+      },
+      "biggest-end" -> { () =>
+        val ends = Seq((n.toLong, 42.0)).toDF("nid", "upstream_m")
+        assert(Flow.biggestEndAssignment(chain.select("src", "dst"), ends)
+          .count() == n)
+      })
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try for ((name, run) <- runs) {
+      org.apache.spark.ListenerBusBridge.drain(sc)
+      shuffled.set(0L)
+      run()
+      org.apache.spark.ListenerBusBridge.drain(sc)
       // linear bound with slack (setup shuffles + per-round frontier of
       // 1); a pending-state reshuffle would be ≥ n²/2 = 45,000 records
       assert(shuffled.get() < 20L * n,
-        s"upstream shuffled ${shuffled.get()} records over $n rounds — " +
+        s"$name shuffled ${shuffled.get()} records over $n rounds — " +
           "per-round work is no longer frontier-sized")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("biggest-end assignment rejects cycles, like its local twin") {
+    val e = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val ends = Seq((1L, 5.0)).toDF("nid", "upstream_m")
+    intercept[IllegalArgumentException] {
+      Flow.biggestEndLocal(Seq((1L, 2L), (2L, 1L)), Seq((1L, 5.0)))
+    }
+    intercept[IllegalStateException] { Flow.biggestEndAssignment(e, ends) }
   }
 
   test("deep-chain biggest-end: long propagation over co-partitioned state") {

@@ -69,6 +69,11 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(ckpted == plain)
       assert(cp.latestComplete().nonEmpty) // durable rounds exist on disk
+      // the durable rounds are frontier DELTAS: their union is the result
+      val Some((_, all)) = cp.allComplete()
+      assert(all.select("nid", "end_nid").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap == plain)
+      assert(all.count() == plain.size)
     }
   }
 
