@@ -8,7 +8,9 @@ package graft
   * pays the complete iterative cost (no warm-cache flattery) and a noise
   * burst cannot poison a query's only measurement. Reported per query:
   * min over reps (the plan's cost in the cleanest window this run saw)
-  * plus the max−min spread (how noisy the window was).
+  * plus the max−min spread (how noisy the window was). Every run also
+  * leaves one [[graft.runtime.Trace]] record in the `.trace.jsonl`
+  * sibling of the output file (see [[tracePath]]).
   */
 object Bench {
   /** One run of one query; only an `ok` run is a timing sample. */
@@ -37,39 +39,68 @@ object Bench {
       s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
   }
 
+  /** One traced run of `query`: its sample, and its trace record with
+    * the row count `body` returns. A run that throws is printed to stderr
+    * and recorded as failed. */
+  def runOne(trace: graft.runtime.Trace, query: String, rep: Int)(
+      body: => Long): (Sample, graft.runtime.Trace.Record) = {
+    trace.begin()
+    val t0 = System.nanoTime()
+    val (rows, error) =
+      try (Some(body), None)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] rep $rep $query FAILED: $e")
+        (None, Some(e))
+      }
+    val secs = (System.nanoTime() - t0) / 1e9
+    (Sample(query, rep, secs, error.isEmpty),
+      trace.end(secs, error, "query" -> query, "rep" -> rep, "rows" -> rows.map(Long.box).orNull))
+  }
+
+  /** Where the trace records of a bench written to `out` go:
+    * `bench_out.json` → `bench_out.trace.jsonl`. */
+  def tracePath(out: String): String = out.stripSuffix(".json") + ".trace.jsonl"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
+    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val spark = graft.runtime.Sessions.local(cpus, cpus)
+    val trace = graft.runtime.Trace.setup(spark)
     // optional comma-separated subset for local iteration (the driver
     // runs the full suite: env unset → all queries)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
+    // one JSON line per (query, rep), flushed as it comes; an unwritable
+    // path must not fail the benchmark
+    val traceOut =
+      try Some(new java.io.PrintWriter(java.nio.file.Files.newBufferedWriter(
+        java.nio.file.Paths.get(tracePath(path)))))
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write ${tracePath(path)}: ${e.getMessage}")
+        None
+      }
     val samples = (1 to reps).flatMap { r =>
       graft.queries.Derived.clearMemo()
       val rep = names.map { name =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] rep $r $name FAILED: $e")
-            false
-          }
-        Sample(name, r, (System.nanoTime() - t0) / 1e9, ok)
+        val (sample, record) =
+          runOne(trace, name, r)(SparkEntry.queries(name)(spark, sfDir).count())
+        traceOut.foreach { w => w.println(record.json); w.flush() }
+        sample
       }
       System.err.println(f"[bench] rep $r/$reps: ${rep.filter(_.ok).map(_.secs).sum}%.1f s")
       rep
     }
+    traceOut.foreach(_.close())
     val out = line(samples, reps, sfDir)
     println(out)
     // Durable copy: the driver captures stdout with a line cap that has
     // truncated the per-query map two rounds running (BENCH_r03/r04 show
     // "parsed": null) — the file keeps the complete record either way.
-    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(path),
       (out + "\n").getBytes("UTF-8"))
     catch { case e: java.io.IOException =>

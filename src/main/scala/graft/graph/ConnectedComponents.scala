@@ -73,8 +73,10 @@ object ConnectedComponents {
     // task, so a single union-find pass replaces the star loop. Durable
     // checkpointers stay iterative (their resume contract is the loop),
     // and a gate of 0 always forces the loop, even on no edges.
-    if (checkpointer.isEmpty && gate.admits(prev._1))
+    if (checkpointer.isEmpty && gate.admits(prev._1)) {
+      graft.runtime.Trace.rounds("connected components", 0)
       return Result(localLabels(e), 0)
+    }
     var done = false
 
     while (!done && rounds < maxRounds) {
@@ -105,6 +107,7 @@ object ConnectedComponents {
       throw new IllegalStateException(s"connected components did not converge " +
         s"in $maxRounds rounds (${prev._1} edges left)")
 
+    graft.runtime.Trace.rounds("connected components", rounds)
     // Converged edge set is a star forest: (child, root) with root = min.
     val roots = e.select(col("dst").as("nid"), col("dst").as("comp")).distinct()
     val labels = e

@@ -138,6 +138,7 @@ object Frontier {
     }
     val out = log.materialize()
     CheckpointGen.release(prev.toSeq ++ pinned ++ retained :+ outs :+ e)
+    graft.runtime.Trace.rounds(name, rounds)
     Result(out, rounds)
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Deterministic OSM-like graph derived from the driver's testdata tables
   * (TESTDATA.md — the only permitted inputs).
@@ -159,9 +160,13 @@ object Derived {
        |  )
        |)""".stripMargin.replace("\n", " ")
 
-  // ---- the cross-query memo registry: key → (value, release) -----------
+  // ---- the cross-query memo registry ----------------------------------
 
-  private val entries = new java.util.HashMap[String, (Any, () => Unit)]()
+  /** An entry's value, the RDDs its build persisted and its release. */
+  private final case class Entry(value: Any, rdds: Seq[org.apache.spark.rdd.RDD[_]],
+      release: () => Unit)
+
+  private val entries = new java.util.HashMap[String, Entry]()
 
   def computeIfAbsent[T](key: String)(build: => T): T =
     computeIfAbsent(key, (_: T) => ())(build)
@@ -170,22 +175,31 @@ object Derived {
     * against one dir; derived frames and iterative results are identical
     * across them). One reentrant lock, and the builder runs with no map
     * bin reserved, so a builder may read other entries (nodes → edges,
-    * minhashcand → shinglesets). [[clearMemo]] unpersists the RDDs the
-    * build persisted ([[graft.runtime.CheckpointGen.persisted]]) and
-    * runs `release(value)`. Job tracers find memo builds by this
-    * method's name.
+    * minhashcand → shinglesets). An entry claims the RDDs its build
+    * persisted ([[graft.runtime.CheckpointGen.persisted]]) less those a
+    * nested build already claimed; [[clearMemo]] unpersists them and runs
+    * `release(value)`. Job tracers find memo builds by this method's
+    * name, and [[graft.runtime.Trace]] charges them to `key`.
     */
   def computeIfAbsent[T](key: String, release: T => Unit)(build: => T): T =
     entries.synchronized {
       entries.get(key) match {
         case null =>
           val (v, rdds) = graft.runtime.CheckpointGen.persisted(
-            SparkSession.active.sparkContext)(build)
-          entries.put(key, (v, () => { graft.runtime.CheckpointGen.release(rdds); release(v) }))
+            SparkSession.active.sparkContext)(graft.runtime.Trace.memo(key)(build))
+          val nested = entries.values.asScala.flatMap(_.rdds.map(_.id)).toSet
+          entries.put(key, Entry(v, rdds.filterNot(r => nested(r.id)), () => release(v)))
           v
-        case (v, _) => v.asInstanceOf[T]
+        case e =>
+          graft.runtime.Trace.memoHit(key)
+          e.value.asInstanceOf[T]
       }
     }
+
+  /** RDD ids each entry claimed (specs check no RDD has two owners). */
+  private[queries] def claims: Map[String, Seq[Int]] = entries.synchronized {
+    entries.asScala.map { case (k, e) => k -> e.rdds.map(_.id) }.toMap
+  }
 
   /** [[computeIfAbsent]] for a frame, checkpointed once by the registry. */
   def memoize(key: String)(f: => DataFrame): DataFrame =
@@ -194,7 +208,10 @@ object Derived {
   /** Release every entry and drop it (Bench clears between reps, so each
     * rep pays the full derivation cost). */
   def clearMemo(): Unit = entries.synchronized {
-    entries.values.forEach(_._2())
+    entries.values.forEach { e =>
+      graft.runtime.CheckpointGen.release(e.rdds)
+      e.release()
+    }
     entries.clear()
   }
 

@@ -107,6 +107,7 @@ object QueriesStream {
     try {
       val q = build(ckpt)
       q.processAllAvailable()
+      graft.runtime.Trace.rounds("stream micro-batches", Option(q.lastProgress).fold(0L)(_.batchId + 1))
       q.stop()
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevSp)

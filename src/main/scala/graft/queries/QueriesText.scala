@@ -31,10 +31,9 @@ object QueriesText {
   private def t(s: SparkSession, d: String, n: String): DataFrame =
     s.read.parquet(s"$d/$n.parquet")
 
-  /** The suffix-array frame q109/q110 share. At cap=128 the ranking is
-    * ONE range exchange sorting the windows themselves
-    * (the `suffix-direct` gate), so the win payload already rode the
-    * only exchange — one full frame (doc_id, pos, win, sa_rank) serves
+  /** The suffix-array frame q109/q110 share. The ranking is ONE range
+    * exchange sorting the windows themselves, so the win payload
+    * already rode the only exchange — one full frame (doc_id, pos, win, sa_rank) serves
     * q109 (projection, no join) and q110 (adjacent-LCP, no rank⋈window
     * join either).
     */

@@ -13,11 +13,16 @@ final case class Gate(name: String, limit: Long) {
     s"gate $name: limit must be >= 0 (0 forces the distributed side), got $limit")
 
   /** For a count the caller already holds (no job). */
-  def admits(n: Long): Boolean = limit > 0 && n <= limit
+  def admits(n: Long): Boolean = {
+    val local = limit > 0 && n <= limit
+    Trace.gate(name, n, limit, local)
+    local
+  }
 
-  /** For a whole frame, read at most `limit + 1` rows deep. */
+  /** For a whole frame, read at most `limit + 1` rows deep (not at all
+    * at limit 0). */
   def admits(df: DataFrame): Boolean =
-    limit > 0 && admits(df.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1).count())
+    admits(if (limit == 0) -1L else df.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1).count())
 
   /** Per-group routing on the row count of each `key` group of `rows`.
     * The big keys are checkpointed lazily: the one bounded emptiness
@@ -29,7 +34,9 @@ final case class Gate(name: String, limit: Long) {
       .filter(col("__n") > limit)
       .select(keys: _*)
       .localCheckpoint(false)
-    Gate.Split(key, bigKeys, bigKeys.limit(1).count() > 0L)
+    val anyBig = bigKeys.limit(1).count() > 0L
+    Trace.gate(name, if (anyBig) 1L else 0L, limit, !anyBig)
+    Gate.Split(key, bigKeys, anyBig)
   }
 }
 

@@ -5,14 +5,13 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnBridge, Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.{CommonPrefixLen, PackedPrefix8, SuffixExprs}
-import graft.runtime.{CheckpointGen, Gate, Ranks}
+import graft.functions.{CommonPrefixLen, SuffixExprs}
+import graft.runtime.Ranks
 
 /** Distributed suffix array + adjacent-suffix LCP — the ExactSubstr
   * dedup machinery of "Deduplicating Training Data Makes Language
-  * Models Better" (Lee et al., 2022), re-expressed as Spark prefix
-  * doubling (Manber–Myers) instead of the paper's single-node
-  * suffix-automaton build.
+  * Models Better" (Lee et al., 2022), re-expressed as one Spark range
+  * exchange instead of the paper's single-node suffix-automaton build.
   *
   * Semantics: every (doc, pos) suffix is ranked by its first `cap`
   * characters under binary collation, ties broken by (doc_id, pos) —
@@ -24,55 +23,26 @@ import graft.runtime.{CheckpointGen, Gate, Ranks}
   * longer than `cap` still surface as runs of positions with
   * `lcp == cap`.
   *
-  * Scale shape (the reason this is a Spark job and not a port):
-  * - The initial width-8 rank is [[graft.functions.PackedPrefix8]] — the
-  *   first 8 bytes packed into an order-consistent long, computed in the
-  *   scan with ZERO shuffles (a string init rank would need a global
-  *   sort just to start).
-  * - Each doubling round (width w → 2w) is one equi-join on
-  *   (doc_id, pos+w) to fetch the partner rank, then ONE range exchange
-  *   to densify ([[graft.runtime.Ranks.withPairGroupMinRank]]: an
-  *   in-partition scan appends each row's group-start rank and
-  *   O(#partitions) boundary stats are carry-chained on the driver — no
-  *   global row_number, no groupBy-min, no join-back, and no reduce key
-  *   at all for the huge early rank classes of a duplicate-heavy
-  *   corpus).
-  * - log2(cap/32) rounds total after the width-32 packed init (2 at
-  *   cap=128), each localCheckpointed
-  *   with superseded generations released (O(1) resident state), with
-  *   early exit as soon as every rank class is a singleton.
-  * - Rank state is 3 longs/suffix; the only O(n·cap) frame is the
-  *   `win` column, needed once at the end to compute exact LCPs of
-  *   ADJACENT pairs (a single self-join on sa_rank = sa_rank+1), where
-  *   [[graft.functions.CommonPrefixLen]] is one codegen'd byte loop.
+  * Scale shape: the `cap`-char window of every suffix is sorted DIRECTLY
+  * in one range exchange ([[graft.runtime.Ranks.withGlobalRowNumber]]:
+  * in-partition row numbers plus O(#partitions) driver-chained offsets,
+  * no single-partition window). At cap 128 that moves ~(cap+16) B a row
+  * once, in one stage. The adjacent pairs are read off the same sorted
+  * scan ([[saWithAdjacent]]), where [[graft.functions.CommonPrefixLen]]
+  * is one codegen'd byte loop.
   *
   * Collation note: ranks order by UTF-8 BYTES (what both Spark and
   * DuckDB use to compare strings), positions/caps count CHARACTERS —
-  * identical for ASCII corpora (the synthetic tables are ASCII; a NUL
-  * byte is the one thing [[graft.functions.SuffixExprs.packedPrefix8]]
-  * cannot distinguish from padding). For NON-ASCII input the ranks are
-  * APPROXIMATE, not merely differently-collated: the init rank covers
-  * the first 8 BYTES while each doubling offset advances 8·2^k
-  * CHARACTERS, so when a prefix holds multi-byte characters the bytes
-  * between byte 8 and the 8-character mark are never compared and two
-  * distinct capped suffixes can receive equal ranks (ties then broken
-  * by (doc_id, pos), diverging from a full byte-wise sort). Treat rank
-  * output as undefined beyond ASCII, exactly like the NUL caveat;
-  * byte-faithful non-ASCII support would require running positions in
-  * byte offsets over the UTF-8 payload.
+  * identical for ASCII corpora (the synthetic tables are ASCII).
   */
 object SuffixArray {
-
-  private def pack8(c: Column): Column =
-    GraftColumnBridge.column(PackedPrefix8(GraftColumnBridge.expression(c)))
 
   private def lcpOf(a: Column, b: Column): Column =
     GraftColumnBridge.column(CommonPrefixLen(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
   /** One row per suffix start: (doc_id, pos, win) with win = the first
-    * `cap` chars from pos. The O(n·cap) frame — kept out of the rank
-    * loop, only joined at the adjacent-pair step.
+    * `cap` chars from pos: the O(n·cap) frame the one sort orders.
     */
   def windows(
       docs: DataFrame, idCol: String, textCol: String, cap: Int): DataFrame = {
@@ -97,170 +67,31 @@ object SuffixArray {
         col("text").substr(col("pos"), lit(cap)).as("win"))
   }
 
-  /** Suffix ranks by prefix doubling: (doc_id, pos, r) where r is
-    * order-consistent over the first `cap` chars (equal iff the capped
-    * suffixes are equal). `gen` carries the loop's checkpoint rotation.
-    */
-  private def doubledRanks(
-      wins: DataFrame, cap: Int, gen: CheckpointGen): DataFrame = {
-    require(cap >= 8 && (cap & (cap - 1)) == 0,
-      s"cap must be a power of two >= 8; got $cap")
-    // width-8 init rank: packed bytes, no shuffle, no densify needed
-    // the joined frame feeds a repartitionByRange, whose range sampling
-    // job recomputes its input — uncheckpointed, the round's sort-merge
-    // join ran TWICE (profiler: two near-equal 30 s-task jobs per round).
-    // One rotated checkpoint makes the sampling pass a cheap re-scan.
-    val joinGen = new CheckpointGen
-    // width-32 init: FOUR packed 8-byte words (lexicographic tuple order
-    // == byte order over the first 32 bytes, 0-padded — the same
-    // NUL-free ASCII contract as pack8) densified in one range exchange.
-    // That is rounds 1 AND 2's densifies WITHOUT their equi-joins: two
-    // fewer join rounds for any cap ≥ 32 (2 rounds at cap=128, where
-    // round 4 needed 4). Every densify also emits the scan's GLOBAL row
-    // number (__sarn — free from the same pass): the final suffix rank
-    // is exactly the last densify's row number, so rankWindows skips the
-    // closing full-frame row-number exchange entirely.
-    var cur: DataFrame = null
-    var w = 8
-    var rounds = 0
-    var allDistinct = false
-    if (cap == 8) {
-      cur = gen.rotate(wins.select(col("doc_id"), col("pos"),
-        pack8(col("win")).as("r")))
-    } else if (cap == 16) {
-      val init = wins.select(col("doc_id"), col("pos"),
-        pack8(col("win")).as("r"),
-        pack8(col("win").substr(lit(9), lit(8))).as("r2"))
-      val (ranked0, allD0) = Ranks.withGroupMinRank(init, Seq("r", "r2"),
-        Seq(col("doc_id"), col("pos")), "__nr", gen = Some(gen),
-        rnOut = Some("__sarn"))
-      cur = ranked0.select(col("doc_id"), col("pos"), col("__nr").as("r"),
-        col("__sarn"))
-      w = 16
-      allDistinct = allD0
-    } else {
-      val init = wins.select(col("doc_id"), col("pos"),
-        pack8(col("win")).as("r"),
-        pack8(col("win").substr(lit(9), lit(8))).as("r2"),
-        pack8(col("win").substr(lit(17), lit(8))).as("r3"),
-        pack8(col("win").substr(lit(25), lit(8))).as("r4"))
-      val (ranked0, allD0) = Ranks.withGroupMinRank(init,
-        Seq("r", "r2", "r3", "r4"),
-        Seq(col("doc_id"), col("pos")), "__nr", gen = Some(gen),
-        rnOut = Some("__sarn"))
-      cur = ranked0.select(col("doc_id"), col("pos"), col("__nr").as("r"),
-        col("__sarn"))
-      w = 32
-      allDistinct = allD0
-    }
-    while (w < cap && !allDistinct) {
-      // partner rank at pos+w; absent (suffix shorter than w) sorts
-      // first: Long.MinValue is strictly below every packed value of a
-      // NUL-free string and every densified rank (>= 1)
-      val partner = cur.select(col("doc_id"), (col("pos") - w).as("pos"),
-        col("r").as("r2"))
-      val joined = joinGen.rotate(cur.select("doc_id", "pos", "r")
-        .join(partner, Seq("doc_id", "pos"), "left")
-        .select(col("doc_id"), col("pos"), col("r"),
-          coalesce(col("r2"), lit(Long.MinValue)).as("r2")))
-      // densify: rank class (r, r2) -> its min global row number, in ONE
-      // range exchange (boundary-carried group ranks — the naive
-      // row_number + groupBy-min + join-back costs two more shuffles of
-      // the full frame per round); allDistinct doubles as the
-      // convergence signal. The densify's own checkpoint rotates through
-      // `gen`, and `cur` is a cheap projection over it — no third
-      // materialization per round.
-      val (ranked, allD) = Ranks.withGroupMinRank(joined, Seq("r", "r2"),
-        Seq(col("doc_id"), col("pos")), "__nr", gen = Some(gen),
-        rnOut = Some("__sarn"))
-      cur = ranked.select(col("doc_id"), col("pos"), col("__nr").as("r"),
-        col("__sarn"))
-      allDistinct = allD
-      w *= 2
-      rounds += 1
-    }
-    lastDoublingRounds.set(rounds)
-    cur
-  }
-
-  /** Doubling rounds executed by the most recent [[saWithWindows]] /
-    * [[suffixRanks]] call ON THIS THREAD (each round = one equi-join +
-    * one range-exchange densify over the position frame) — cost
-    * telemetry for the scale-evidence tools; ≤ log2(cap/8), smaller on
-    * early exit. */
-  val lastDoublingRounds = new ThreadLocal[Int] {
-    override def initialValue(): Int = 0
-  }
-
-  /** Caps at or below this sort DIRECTLY: sa_rank is by definition
-    * row_number() OVER (ORDER BY win, doc_id, pos), so one range
-    * exchange carrying the window itself replaces the packed init plus
-    * every doubling round. Byte math at cap=128: the direct exchange
-    * moves ~(cap+16) B/row ONCE, the doubling path moves ~200 B/row
-    * across 5 exchanges (init densify 48 B + 2×(equi-join ~48 B +
-    * densify ~32 B)) and pays a sort per exchange — fewer bytes AND one
-    * stage instead of ~10 (guide §2.4), at every scale, not just
-    * locally. Doubling remains the scale shape for larger caps, where
-    * O(n·cap) exchange bytes overtake O(n·log(cap/8)·24 B).
-    */
-  private val DirectSort = Gate("suffix-direct", 128L)
-
   /** The full suffix array with its comparison windows:
     * (doc_id, pos, sa_rank, win) — sa_rank is the global 1-based
-    * position in capped-suffix order (ties by (doc_id, pos)). The one
-    * frame q109 (ranks) and q110 (adjacent-pair LCP) both read, so the
-    * ranking runs once per input.
+    * position in capped-suffix order (ties by (doc_id, pos)). The
+    * two-phase row number keeps the win column, so there is no join back.
     */
   def saWithWindows(
       docs: DataFrame, idCol: String, textCol: String,
-      cap: Int = 128): DataFrame = {
-    val wins = windows(docs, idCol, textCol, cap).localCheckpoint(true)
-    if (DirectSort.admits(cap)) {
-      // the two-phase row number preserves the win column — no join back
-      lastDoublingRounds.set(0)
-      Ranks.withGlobalRowNumber(wins,
-        Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
-    } else rankWindows(wins, cap).join(wins, Seq("doc_id", "pos"))
-  }
+      cap: Int = 128): DataFrame =
+    Ranks.withGlobalRowNumber(windows(docs, idCol, textCol, cap).localCheckpoint(true),
+      Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
 
   /** The rank side alone from a (checkpointed) [[windows]] frame:
-    * (doc_id, pos, sa_rank). Callers that only need ranks (q109) drop
-    * the O(n·cap) win payload right after the one ranking exchange.
-    * `directSortMax` 0 forces the doubling loop (specs pin direct ≡
-    * doubling ranks that way).
-    */
-  def rankWindows(
-      wins: DataFrame, cap: Int = 128,
-      directSortMax: Long = DirectSort.limit): DataFrame = {
-    if (DirectSort.copy(limit = directSortMax).admits(cap)) {
-      lastDoublingRounds.set(0)
-      return Ranks.withGlobalRowNumber(wins,
-          Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
-        .select("doc_id", "pos", "sa_rank")
-    }
-    val gen = new CheckpointGen
-    val r = doubledRanks(wins, cap, gen)
-    // the last densify's scan row number IS row_number() OVER
-    // (ORDER BY final rank, doc_id, pos): the scan order refines every
-    // later width's order and breaks ties by (doc_id, pos) — reuse it
-    // instead of paying one more full-frame range exchange (cap == 8 is
-    // the only densify-free path left)
-    if (r.columns.contains("__sarn"))
-      r.select(col("doc_id"), col("pos"), col("__sarn").as("sa_rank"))
-    else
-      Ranks.withGlobalRowNumber(r,
-        Seq(col("r"), col("doc_id"), col("pos")), "sa_rank")
-        .select("doc_id", "pos", "sa_rank")
-  }
+    * (doc_id, pos, sa_rank). */
+  def rankWindows(wins: DataFrame): DataFrame =
+    Ranks.withGlobalRowNumber(wins,
+        Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
+      .select("doc_id", "pos", "sa_rank")
 
   /** The suffix array: (doc_id, pos, sa_rank). */
   def suffixRanks(
       docs: DataFrame, idCol: String, textCol: String,
       cap: Int = 128): DataFrame =
-    rankWindows(
-      windows(docs, idCol, textCol, cap).localCheckpoint(true), cap)
+    rankWindows(windows(docs, idCol, textCol, cap).localCheckpoint(true))
 
-  /** Direct-path suffix array WITH adjacency inline:
+  /** The suffix array WITH adjacency inline:
     * (doc_id, pos, win, sa_rank, doc_a, pos_a, lcp) where (doc_a, pos_a)
     * is the suffix at sa_rank−1 and lcp its exact common prefix with
     * this row (nulls on the global first row). The pairs are read off
@@ -269,15 +100,10 @@ object SuffixArray {
     * self-join (two more full-frame exchanges + sorts of the window
     * payload) disappears; partition-boundary pairs are patched from the
     * same O(#partitions) driver stats that chain the rank offsets.
-    * Requires cap ≤ [[DirectSort]]'s limit (the doubling path has no single
-    * sorted scan to read pairs from).
     */
   def saWithAdjacent(
       docs: DataFrame, idCol: String, textCol: String,
       cap: Int = 128): DataFrame = {
-    require(DirectSort.admits(cap),
-      s"saWithAdjacent needs the direct-sort path (cap <= ${DirectSort.limit})")
-    lastDoublingRounds.set(0)
     val wins = windows(docs, idCol, textCol, cap).localCheckpoint(true)
     val order = Seq(col("win").asc, col("doc_id").asc, col("pos").asc)
     val sorted = wins.repartitionByRange(order: _*)

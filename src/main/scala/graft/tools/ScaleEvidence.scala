@@ -7,7 +7,7 @@ import graft.fixtures.Synthetic
 import graft.geo.Geo
 import graft.graph.{ConnectedComponents, DistPeel, DownOps, Flow, GraphBuild, WaterwayFeatures}
 import graft.pipeline.Extras
-import graft.runtime.{CheckpointGen, Ranks, Sessions}
+import graft.runtime.{CheckpointGen, Ranks, Sessions, Trace}
 import graft.text.{SuffixArray, TextOps}
 import graft.web.LinkGraph
 
@@ -469,7 +469,7 @@ object ScaleEvidence {
       }),
 
     // suffix array + adjacent-pair LCP (q109/q110); size is the doc count.
-    // Near-duplicate families keep the rank classes fat for several rounds
+    // Near-duplicate families share long windows across documents
     Entry[DataFrame]("suffix", "suffix_at_scale", 30000L, 50L,
       (spark, n) => ckpt(documents(spark, n)),
       (docs, _) => {
@@ -477,8 +477,7 @@ object ScaleEvidence {
         prefixed("sa_")(digest(sa, col("doc_id"), col("pos"), col("sa_rank"))()) ++
           prefixed("dup_")(digest(SuffixArray.dupSubstrStats(docs, sa, "doc_id"),
             col("doc_id"), col("n_dup_adj"), col("max_dup_len"), col("sum_dup_len"))(
-            "mass" -> sum(col("sum_dup_len")))) ++
-          Seq("rounds" -> SuffixArray.lastDoublingRounds.get())
+            "mass" -> sum(col("sum_dup_len"))))
       }),
 
     // Bloom-prefiltered incremental dedup (q83): snapshot of `size` docs
@@ -571,14 +570,19 @@ object ScaleEvidence {
   }
 
   /** One run on `spark`: the wall seconds of `op` and the invariants
-    * (facts first). */
+    * (facts first). The run's [[Trace]] record goes to stderr. */
   def measure[A](e: Entry[A], spark: SparkSession, size: Long): (Double, Invariants) =
     released(spark) {
+      val trace = Trace.setup(spark)
       val in = e.fixture(spark, size)
       val facts = e.facts(in, size)
+      trace.begin()
       val t0 = System.nanoTime()
       val inv = e.op(in, size)
-      ((System.nanoTime() - t0) / 1e9, facts ++ inv)
+      val secs = (System.nanoTime() - t0) / 1e9
+      System.err.println("[trace] " + trace.end(secs, None, "entry" -> e.name, "size" -> size,
+        "cpus" -> spark.sparkContext.defaultParallelism).json)
+      (secs, facts ++ inv)
     }
 
   /** Both sides of the entry's size gate at its parity size (no-op

@@ -305,10 +305,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try for ((name, run) <- runs) {
-      org.apache.spark.ListenerBusBridge.drain(sc)
+      org.apache.spark.rdd.GraftBusBridge.drain(sc)
       shuffled.set(0L)
       run()
-      org.apache.spark.ListenerBusBridge.drain(sc)
+      org.apache.spark.rdd.GraftBusBridge.drain(sc)
       // linear bound with slack (setup shuffles + per-round frontier of
       // 1); a pending-state reshuffle would be ≥ n²/2 = 45,000 records
       assert(shuffled.get() < 20L * n,

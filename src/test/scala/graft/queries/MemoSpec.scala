@@ -23,6 +23,16 @@ class MemoSpec extends AnyFunSuite with SparkTestBase {
     assert(run("q32_minhash_lsh", sf001) > 0L)
   }
 
+  test("a nested build claims its RDDs once: no RDD belongs to two entries") {
+    Derived.clearMemo()
+    Derived.nodesDF(spark, sf0001) // nodes → edges
+    val claims = Derived.claims
+    assert(claims.keySet == Set(s"edges:$sf0001", s"nodes:$sf0001"))
+    val ids = claims.values.flatten.toSeq
+    assert(claims.values.forall(_.nonEmpty) && ids.distinct.size == ids.size, claims)
+    Derived.clearMemo()
+  }
+
   test("clearMemo unpersists every RDD the builds persisted") {
     Derived.clearMemo()
     val sc = spark.sparkContext

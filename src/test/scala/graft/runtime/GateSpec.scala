@@ -9,7 +9,6 @@ import graft.SparkTestBase
 import graft.geo.{CellIndex, Raster}
 import graft.graph.{ConnectedComponents, DownOps, Flow, GraphBuild, Local, WaterwayFeatures}
 import graft.pipeline.Extras
-import graft.text.SuffixArray
 import graft.web.LinkGraph
 
 /** Every size gate routes through [[Gate]]: the rule itself, and — as a
@@ -110,8 +109,6 @@ class GateSpec extends AnyFunSuite with SparkTestBase {
       () => LinkGraph.kcorePeel(n.select(col("nid").as("doc_id")), e, localMaxEdges = -1L),
       () => GraphBuild.compressedNumNodes(e.withColumn("comp", lit(1L)), localPerCompMax = -1L),
       () => Extras.frames(e, n, spark, sizeThreshold = -1L),
-      () => SuffixArray.rankWindows(SuffixArray.windows(
-        Seq((1L, "abc")).toDF("doc_id", "text"), "doc_id", "text", 16), 16, directSortMax = -1L),
       () => Raster.vectorize(Seq((0L, 0L, 0L, 1L)).toDF("cell", "x", "y", "v"), 1L, 2,
         driverMaxRes = -1L))
     calls.foreach(c => intercept[IllegalArgumentException](c()))
@@ -215,18 +212,6 @@ class GateSpec extends AnyFunSuite with SparkTestBase {
       rows(Extras.longestSourceMouth(e, spark)) ==
         rows(Extras.longestSourceMouth(e, spark, sizeThreshold = 0L))
     }
-  }
-
-  test("suffix-direct: direct sort ≡ prefix doubling") {
-    val texts = Gen.listOfN(6, Gen.stringOfN(12, Gen.oneOf('a', 'b')))
-    val params = Test.Parameters.default.withMinSuccessfulTests(3)
-      .withWorkers(1).withInitialSeed(Seed(20261018L))
-    val res = Test.check(params, Prop.forAllNoShrink(texts) { ts =>
-      val w = SuffixArray.windows(ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("doc_id", "text"), "doc_id", "text", 16).localCheckpoint(true)
-      rows(SuffixArray.rankWindows(w, 16)) == rows(SuffixArray.rankWindows(w, 16, directSortMax = 0L))
-    })
-    assert(res.passed, res.status.toString)
   }
 
   test("raster-driver: driver union-find ≡ tile-adjacency CC") {

@@ -23,25 +23,10 @@ class KnobCensusSpec extends AnyFunSuite {
     "graph/ConnectedComponents.scala: SPARK_GRAFT_CC_LOCAL_MAX",
     "graph/Local.scala: graft.maxLocalGroupRows",
     "runtime/Sessions.scala: SPARK_GRAFT_LOCAL_DIR",
-    "tools/DedupProfile.scala: SPARK_GRAFT_CPUS",
-    "tools/DedupProfile.scala: SPARK_GRAFT_DEDUP_N",
     "tools/ExplainQuery.scala: SPARK_GRAFT_CPUS",
     "tools/ExplainQuery.scala: SPARK_GRAFT_SF_DIR",
     "tools/ExplainQuery.scala: SPARK_GRAFT_SHUFFLE",
-    "tools/MakeFixtureInput.scala: SPARK_GRAFT_SCALE_WAYS",
-    "tools/PlanDump.scala: PD_DIR",
-    "tools/PlanDump.scala: PD_QUERIES",
-    "tools/PlanDump.scala: PD_TAG",
-    "tools/PlanDump.scala: SPARK_GRAFT_CPUS",
-    "tools/PlanDump.scala: SPARK_GRAFT_SF_DIR",
-    "tools/Profile.scala: SPARK_GRAFT_CPUS",
-    "tools/Profile.scala: SPARK_GRAFT_SCALE_WAYS",
-    "tools/Profile.scala: SPARK_GRAFT_SHUFFLE",
-    "tools/QueryProfile.scala: QP_JOBS",
-    "tools/QueryProfile.scala: QP_QUERIES",
-    "tools/QueryProfile.scala: QP_TOP",
-    "tools/QueryProfile.scala: SPARK_GRAFT_CPUS",
-    "tools/QueryProfile.scala: SPARK_GRAFT_SF_DIR")
+    "tools/MakeFixtureInput.scala: SPARK_GRAFT_SCALE_WAYS")
 
   test("src/main reads only the allow-listed env vars and JVM properties") {
     val root = Paths.get("src/main/scala")
