@@ -117,7 +117,6 @@ object LumpWaysDownMain {
     if (args.loops.nonEmpty || args.loopsCsvStatsFile.nonEmpty ||
         args.loopsOpenmetrics.nonEmpty) {
       val loopsDf = DownOps.loops(withLen.select("src", "dst"), nodes, Some(scc))
-        .localCheckpoint(true)
       val geom = DownOps.loopGeometry(withLen.select("src", "dst"), nodes, scc)
         .localCheckpoint(true)
       val boundaries = boundaryPolygons(spark, dir)
@@ -184,8 +183,8 @@ object LumpWaysDownMain {
         if (args.flowFollowsTag.nonEmpty) contracted
         else contracted.withColumn("tag", lit(null).cast("string"))
       val up = Flow.upstreamFlowHybrid(flowTag)
-      val nodeUp = up.nodeUpstream.localCheckpoint(true)
-      val flows = up.edgeFlow.localCheckpoint(true)
+      val nodeUp = up.nodeUpstream
+      val flows = up.edgeFlow
 
       val ends = Flow.endPoints(contracted.select("src", "dst"))
         .join(nodeUp.select(col("nid"), col("upstream_m")), Seq("nid"))

@@ -443,12 +443,11 @@ object Dedup {
       maxBucket: Int): DataFrame = {
     require(bands >= 1 && bands <= 4,
       s"16-bit bands over a 63-bit hash: 1..4; got $bands")
-    val sh = hashed.select(col("id"), col("sh")).localCheckpoint(true)
     val keyCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))
     }
-    val buckets = sh
+    val buckets = hashed
       .select(col("id"), col("sh"), explode(array(keyCols: _*)).as("bk"))
       .select(col("id"), col("sh"), col("bk.band").as("band"),
         col("bk.key").as("key"))

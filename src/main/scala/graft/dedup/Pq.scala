@@ -113,7 +113,7 @@ object Pq {
       })
     }
 
-    val codes = codesOf(cents).select("id", "codes").localCheckpoint(true)
+    val codes = codesOf(cents).select("id", "codes")
 
     // bounded deterministic query set + its ADC lookup tables
     val qs = vecs.filter(col("id") % queryMod === 0L)

@@ -1,20 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native expressions for the suffix-array / exact-substring-dedup
+/** Native expression for the suffix-array / exact-substring-dedup
   * operators (graft.text.SuffixArray).
   *
-  * Both are codegen'd single-pass byte loops over the UTF-8 payload —
-  * the alternatives are interpreted: a 7-step binary-descent LCP written
-  * as chained `when(substr...)` Columns re-materialises O(log cap)
+  * A codegen'd single-pass byte loop over the UTF-8 payload — the
+  * interpreted alternative, a 7-step binary-descent LCP written as
+  * chained `when(substr...)` Columns, re-materialises O(log cap)
   * substrings per row and explodes the expression tree under project
-  * collapsing, and an 8-char prefix pack written as a `foldLeft` of
-  * `ascii(substring(...))` evaluates eight interpreted substrings.
+  * collapsing.
   */
 object SuffixExprs {
 
@@ -42,26 +41,6 @@ object SuffixExprs {
     }
     chars
   }
-
-  /** First 8 UTF-8 bytes packed big-endian into a long, zero-padded,
-    * XOR'd with Long.MinValue so SIGNED long order == unsigned byte
-    * (memcmp) order. For inputs without NUL bytes, packed(a) < packed(b)
-    * iff the first-8-byte prefixes compare that way under binary
-    * collation, and packed(a) == packed(b) iff the prefixes are equal —
-    * the order-consistent width-8 initial rank of the prefix-doubling
-    * suffix sort, built with zero shuffles.
-    */
-  def packedPrefix8(s: UTF8String): Long = {
-    val n = math.min(s.numBytes, 8)
-    var v = 0L
-    var i = 0
-    while (i < n) {
-      v = (v << 8) | (s.getByte(i) & 0xffL)
-      i += 1
-    }
-    v = v << (8 * (8 - n))
-    v ^ Long.MinValue
-  }
 }
 
 /** `graft_common_prefix_len(a, b)` — see [[SuffixExprs.commonPrefixChars]]. */
@@ -87,27 +66,5 @@ case class CommonPrefixLen(left: Expression, right: Expression)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       s"${ev.value} = graft.functions.SuffixExprs.commonPrefixChars($a, $b);"
-    })
-}
-
-/** `graft_packed_prefix8(s)` — see [[SuffixExprs.packedPrefix8]]. */
-case class PackedPrefix8(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_packed_prefix8"
-
-  override protected def withNewChildInternal(newChild: Expression): PackedPrefix8 =
-    copy(child = newChild)
-
-  protected override def nullSafeEval(input: Any): Any =
-    SuffixExprs.packedPrefix8(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      s"${ev.value} = graft.functions.SuffixExprs.packedPrefix8($s);"
     })
 }

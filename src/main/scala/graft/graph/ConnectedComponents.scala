@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.runtime.CheckpointGen
 
 /** Iterative connected components in DataFrame joins — the alternating
   * large-star / small-star algorithm ("Finding connected components in
@@ -13,9 +13,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Each round is two self-aggregating joins; lineage is truncated with
   * `localCheckpoint` every round (or durable checkpoints via
-  * [[graft.runtime.IterationCheckpointer]] for resumability). The fixpoint
-  * test is an order-independent XOR-fingerprint + count of the edge set —
-  * one cheap aggregate per round instead of a full `except`.
+  * [[graft.runtime.IterationCheckpointer]] for resumability), and the
+  * superseded generation is released, so one stays resident. The
+  * fixpoint test is an order-independent XOR-fingerprint + count of the
+  * edge set — one cheap aggregate per round instead of a full `except`.
   *
   * Output label = **min nid of the component**, matching the reference's
   * BTreeMap-first `root_nodeid` (/root/reference/src/way_group.rs:27-36).
@@ -64,7 +65,11 @@ object ConnectedComponents {
     val e0 = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
-    var e = (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint(false)
+    val sc = edges.sparkSession.sparkContext
+    // the RDDs of the live generation: each round releases its
+    // predecessor's once the fingerprint has materialized the new one
+    var (e, live) = CheckpointGen.persisted(sc)(
+      (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint(false))
 
     var rounds = 0
     var prev = fingerprint(e)
@@ -92,11 +97,13 @@ object ConnectedComponents {
       // one driver round-trip per round instead of two (the eager form's
       // count job + the fingerprint job). Durable checkpointers keep
       // their own materialization contract.
-      val next = checkpointer match {
+      val (next, created) = CheckpointGen.persisted(sc)(checkpointer match {
         case Some(cp) => cp(rounds, ss)
         case None     => ss.localCheckpoint(false)
-      }
+      })
       val fp = fingerprint(next)
+      CheckpointGen.release(live)
+      live = created
       done = fp == prev
       prev = fp
       e = next

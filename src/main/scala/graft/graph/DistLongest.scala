@@ -113,7 +113,6 @@ object DistLongest {
     if (levels > 0) {
       jumps += resolved.filter(col("parent").isNotNull)
         .select(col("mouth"), col("nid").as("v"), col("parent").as("j"))
-        .localCheckpoint(true)
       for (k <- 1 until levels) {
         val prev = jumps(k - 1)
         val hop2 = prev.select(col("mouth"), col("v").as("j"), col("j").as("jj"))
@@ -122,8 +121,9 @@ object DistLongest {
           .localCheckpoint(true)
       }
     }
+    val gen = new graft.runtime.CheckpointGen
     var items = targets.select(col("mouth"), col("nid").as("v"),
-      lit(0L).as("off"), col("hops").as("len")).localCheckpoint(true)
+      lit(0L).as("off"), col("hops").as("len"))
     for (k <- (levels - 1) to 0 by -1) {
       val step = 1L << k
       val keep = items.filter(col("len") < step)
@@ -133,7 +133,7 @@ object DistLongest {
       val b = split.join(jumps(k), Seq("mouth", "v"))
         .select(col("mouth"), col("j").as("v"),
           (col("off") + step).as("off"), (col("len") - step).as("len"))
-      items = keep.unionByName(a).unionByName(b).localCheckpoint(true)
+      items = gen.rotate(keep.unionByName(a).unionByName(b))
     }
     items.select(col("mouth"), col("off").as("pos"), col("v").as("nid"))
   }

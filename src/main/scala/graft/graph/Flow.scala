@@ -146,12 +146,12 @@ object Flow {
         val (up, flows) = upstreamLocal(es)
         up.iterator.map(kv => ("n", kv._1, 0L, None: Option[String], 0.0, kv._2)) ++
           flows.iterator.map { case (s, d, t, l, f) => ("e", s, d, t, l, f) }
-      }.localCheckpoint(true)
-    val localNodes = localRes.filter(_._1 == "n").map(r => (r._2, r._6))
-      .toDF("nid", "upstream_m")
-    val localFlows = localRes.filter(_._1 == "e")
-      .map(r => (r._2, r._3, r._4.orNull, r._5, r._6))
-      .toDF("src", "dst", "tag", "len", "flow_m")
+      }.toDF("kind", "a", "b", "tag", "len", "value").localCheckpoint(true)
+    val localNodes = localRes.filter(col("kind") === "n")
+      .select(col("a").as("nid"), col("value").as("upstream_m"))
+    val localFlows = localRes.filter(col("kind") === "e")
+      .select(col("a").as("src"), col("b").as("dst"), col("tag"), col("len"),
+        col("value").as("flow_m"))
 
     if (!split.anyBig) UpstreamResult(localNodes, localFlows, 0)
     else {

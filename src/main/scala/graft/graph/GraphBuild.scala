@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.model.Edge
+import graft.runtime.CheckpointGen
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -169,12 +170,15 @@ object GraphBuild {
 
     if (dupKeys.isEmpty) return canon.as[KeyedEdge]
 
-    var uniq = canon.join(dupKeys, Seq("gid", "src", "dst"), "left_anti")
-      .localCheckpoint(true)
+    // one generation of each loop frame stays resident
+    val (uniqGen, pendingGen, resolvedGen) =
+      (new CheckpointGen, new CheckpointGen, new CheckpointGen)
+    var uniq = uniqGen.rotate(
+      canon.join(dupKeys, Seq("gid", "src", "dst"), "left_anti"))
     // pending: canonical-form edges not yet merged (all dup-key members)
-    var pending = canon.join(dupKeys, Seq("gid", "src", "dst"), "left_semi")
-      .withColumn("taken", lit(false))
-      .as[PendingEdge].localCheckpoint(true)
+    var pending = pendingGen.rotate(
+      canon.join(dupKeys, Seq("gid", "src", "dst"), "left_semi")
+        .withColumn("taken", lit(false))).as[PendingEdge]
 
     var round = 0
     while (!pending.isEmpty && round < 6) {
@@ -214,7 +218,8 @@ object GraphBuild {
       // ONE checkpoint of the groupByKey output per round: winners and
       // newEdges are filters over it — uncheckpointed, the back-off
       // shuffle re-ran once per consumer branch (4× per round)
-      val resolvedC = resolved.localCheckpoint(true)
+      val resolvedC = resolvedGen.rotate(resolved.toDF())
+        .as[(String, KeyedEdge)]
       val winners = resolvedC.filter(_._1 == "w").map(_._2).toDF()
       val newEdges = resolvedC.filter(_._1 == "l").map(_._2).toDF()
 
@@ -234,9 +239,9 @@ object GraphBuild {
       val freshClean = fresh.join(freshDupKeys, Seq("gid", "src", "dst"), "left_anti")
       val freshDups = fresh.join(freshDupKeys, Seq("gid", "src", "dst"), "left_semi")
         .withColumn("taken", lit(false))
-      uniq = uniqW.union(freshClean).localCheckpoint(true)
-      pending = collideWithUniq.union(freshDups)
-        .as[PendingEdge].localCheckpoint(true)
+      // pending first: both read the previous uniq, which uniq's rotation releases
+      pending = pendingGen.rotate(collideWithUniq.union(freshDups)).as[PendingEdge]
+      uniq = uniqGen.rotate(uniqW.union(freshClean))
       round += 1
     }
     val leftover = pending.count()

@@ -111,7 +111,6 @@ object WaterwayFeatures {
       .dropDuplicates("gkey", "src", "dst")
       .join(n1, Seq("src")).join(n2, Seq("dst"))
       .select("gkey", "src", "dst", "flow", "len", "slat", "slon", "dlat", "dlon")
-      .localCheckpoint(true)
     // exploded by endpoint, for equi-joins against shared-node frames
     val cex = ce
       .withColumn("nid", explode(array(col("src"), col("dst"))))
@@ -265,7 +264,6 @@ object WaterwayFeatures {
         coalesce(col("parents"), lit("[]")).as("parents"),
         coalesce(col("side_channels"), lit("[]")).as("side_channels"),
         coalesce(col("sea"), lit("[]")).as("sea"))
-      .localCheckpoint(true)
 
     (e, GroupBundle(metas, byKey, levels, sideChannelGroups), relProps)
   }

@@ -174,25 +174,28 @@ object LumpWays {
             .isin(cfg.onlyNodeids: _*))
           .select("comp").distinct()
         lens0.join(wanted, Seq("comp"), "left_semi")
-      }).localCheckpoint(true)
+      })
 
     // 6. min/max length filters (C7/C8)
     val afterMin: DataFrame = cfg.minLength match {
       case None => lens
       case Some(MinLengthFilter.Length(m)) => lens.filter(col("length_m") >= m)
-      case Some(MinLengthFilter.PercentLongest(f)) =>
-        val longest = lens.agg(max("length_m")).head().getDouble(0)
-        lens.filter(col("length_m") >= f * longest)
-      case Some(MinLengthFilter.PercentTotal(f)) =>
-        val total = lens.agg(sum("length_m")).head().getDouble(0)
-        lens.filter(col("length_m") >= f * total)
-      case Some(MinLengthFilter.IncludeTotalPercentage(f)) =>
-        val total = lens.agg(sum("length_m")).head().getDouble(0)
-        val thresh = graft.runtime.Ranks.withGlobalCumsum(lens,
-            Seq(col("length_m").desc, col("comp").asc), col("length_m"), "cum")
-          .filter(col("cum") >= f * total)
-          .agg(max("length_m")).head().getDouble(0)
-        lens.filter(col("length_m") >= thresh)
+      case Some(relative) =>
+        // read twice: the threshold job, then the filter
+        val l = lens.localCheckpoint(true)
+        val thresh = (relative: @unchecked) match {
+          case MinLengthFilter.PercentLongest(f) =>
+            f * l.agg(max("length_m")).head().getDouble(0)
+          case MinLengthFilter.PercentTotal(f) =>
+            f * l.agg(sum("length_m")).head().getDouble(0)
+          case MinLengthFilter.IncludeTotalPercentage(f) =>
+            val total = l.agg(sum("length_m")).head().getDouble(0)
+            graft.runtime.Ranks.withGlobalCumsum(l,
+                Seq(col("length_m").desc, col("comp").asc), col("length_m"), "cum")
+              .filter(col("cum") >= f * total)
+              .agg(max("length_m")).head().getDouble(0)
+        }
+        l.filter(col("length_m") >= thresh)
     }
     val afterMax = cfg.maxLengthM
       .map(m => afterMin.filter(col("length_m") <= m)).getOrElse(afterMin)

@@ -233,12 +233,10 @@ object Derived {
     */
   def dagUpstream(spark: SparkSession, dir: String): graft.graph.Flow.UpstreamResult =
     computeIfAbsent(s"upstream:$dir") {
-      val r = graft.graph.Flow.upstreamFlowHybrid(
+      graft.graph.Flow.upstreamFlowHybrid(
         dagEdgesDF(spark, dir)
           .withColumn("tag", lit(null).cast("string")),
         labels = Some(QueriesGraph.ccLabels(spark, dir)))
-      r.copy(nodeUpstream = r.nodeUpstream.localCheckpoint(true),
-        edgeFlow = r.edgeFlow.localCheckpoint(true))
     }
 
   /** SCC of the cyclic orientation, memoised. The weak-CC pass reuses the

@@ -87,33 +87,39 @@ object QueriesStream {
       stageQuartileFiles(ev, "sharedq")
     }
 
-  /** Start-and-drain a bounded stateful stream with a SMALL
-    * state-partition count and a tmpfs checkpoint, then return the
-    * materialized memory-sink table. Stateful operators commit
-    * shufflePartitions × store-instances files every micro-batch, so the
-    * session default (32) is pure overhead on these bounded small-state
-    * replays — q79 measured 20.9 s → 6.6 s min-of-2 at sf0.1 from this
-    * alone. `build` receives the checkpoint dir and must `.start()` the
-    * query inside the callback (partition count is captured at start).
+  /** State partitions of the bounded stream replays. Stateful operators
+    * commit partitions × store-instances files every micro-batch, so the
+    * session default (32) is pure overhead on these small-state replays —
+    * q79 measured 20.9 s → 6.6 s min-of-2 at sf0.1 from this alone. */
+  private val StreamPartitions = 4
+
+  /** Start-and-drain a bounded stateful stream in a session scope of its
+    * own — the caller's runtime SQL conf with [[StreamPartitions]] shuffle
+    * partitions and a tmpfs checkpoint — so the caller's session is never
+    * touched. `build` gets the scoped session and the checkpoint dir and
+    * must `.start()` the query on that session (the partition count is
+    * captured at start). The memory sink is a view of the scoped session;
+    * its rows (already on the driver) come back as a frame of the
+    * caller's session.
     */
   private def runSmallStateStream(s: SparkSession, sinkName: String)(
-      build: String => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
+      build: (SparkSession, String) => org.apache.spark.sql.streaming.StreamingQuery)
+      : DataFrame = {
+    val scoped = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) scoped.conf.set(k, v) }
+    scoped.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toString)
     val base =
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
     val ckpt = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(base), s"${sinkName}_ckpt").toString
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
     try {
-      val q = build(ckpt)
+      val q = build(scoped, ckpt)
       q.processAllAvailable()
       graft.runtime.Trace.rounds("stream micro-batches", Option(q.lastProgress).fold(0L)(_.batchId + 1))
       q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevSp)
-      delete(ckpt)
-    }
-    s.table(sinkName).localCheckpoint(true)
+    } finally delete(ckpt)
+    val sink = scoped.table(sinkName)
+    s.createDataFrame(sink.collectAsList(), sink.schema)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -128,8 +134,8 @@ object QueriesStream {
         dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
       // small-state run (the q79 fix): the complete-mode agg state store
       // commits session-partition-count files per batch otherwise
-      try runSmallStateStream(s, sinkName) { ckpt =>
-        s.readStream
+      try runSmallStateStream(s, sinkName) { (ss, ckpt) =>
+        ss.readStream
           .schema(schema)
           .parquet(dir.toString)
           .groupBy(window(col("ts"), "300 seconds"), col("event_type"))
@@ -160,8 +166,8 @@ object QueriesStream {
       val schema = s.read.parquet(dir).schema
       counter += 1
       val sinkName = s"q62_sink_$counter"
-      runSmallStateStream(s, sinkName) { ckpt =>
-        s.readStream
+      runSmallStateStream(s, sinkName) { (ss, ckpt) =>
+        ss.readStream
           .schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(dir)
@@ -196,8 +202,8 @@ object QueriesStream {
       val sinkName = s"q60_sink_$counter"
       // small-state run: the dedup state store otherwise commits
       // session-partition-count files per micro-batch (the q79 fix)
-      runSmallStateStream(s, sinkName) { ckpt =>
-        s.readStream
+      runSmallStateStream(s, sinkName) { (ss, ckpt) =>
+        ss.readStream
           .schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(dir)
@@ -228,8 +234,8 @@ object QueriesStream {
       val GapUs = 300000000L
       // small-state run (the q79 fix): flatMapGroupsWithState commits
       // session-partition-count state files per micro-batch otherwise
-      runSmallStateStream(s, sinkName) { ckpt =>
-      s.readStream
+      runSmallStateStream(s, sinkName) { (ss, ckpt) =>
+      ss.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(dir)
@@ -281,8 +287,8 @@ object QueriesStream {
       val schema = s.read.parquet(dir).schema
       counter += 1
       val sinkName = s"q79_sink_$counter"
-      runSmallStateStream(s, sinkName) { ckpt =>
-        val src = s.readStream
+      runSmallStateStream(s, sinkName) { (ss, ckpt) =>
+        val src = ss.readStream
           .schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(dir)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * partition holds a contiguous key range, partitions ordered by id),
   * `sortWithinPartitions`, then ONE `mapPartitions` scan appends the
   * partition id and the partition-local running state (row number /
-  * running sum / group-start rank). A `Window.partitionBy(pid)` would
+  * running sum). A `Window.partitionBy(pid)` would
   * compute the same values but costs an extra full-frame hash exchange
   * (RangePartitioning does not satisfy the window's clustered
   * distribution — measured, not guessed); the scan keeps the frame where
@@ -157,7 +157,6 @@ object Ranks {
       df: DataFrame, grpCol: String, order: Seq[Column], keepPpm: Long,
       rankOut: String = "rank", keptOut: String = "kept"): DataFrame = {
     val rn = withGlobalRowNumber(df, col(grpCol).asc +: order, "__grn")
-      .localCheckpoint(true) // feeds the per-group stats AND the output
     val stats = rn.groupBy(grpCol)
       .agg((min("__grn") - 1L).as("base"), count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -175,122 +174,6 @@ object Ranks {
         when(col(rankOut) <= element_at(typedLit(keepMap), col(grpCol)),
           1L).otherwise(0L))
       .drop("__grn")
-  }
-
-  /** Group-min global row number over a TWO-LONG-COLUMN key in ONE range
-    * exchange — the rank-densify step of the prefix-doubling suffix sort
-    * (`text.SuffixArray`), where the naive form (global row_number +
-    * groupBy(k1,k2).min + join back) costs two extra shuffles of the
-    * full frame per round.
-    *
-    * Shape: range exchange on (k1, k2, tie…) + ONE in-partition scan
-    * (row number, group-start flag, running group-start rank — the same
-    * sortedScan that backs every helper here, so no window and no
-    * second full-frame exchange), then per-partition boundary stats
-    * (count, first/last key, last group start, start count — O(#parts)
-    * rows) are collected and chained on the driver so groups SPANNING
-    * partition boundaries (equal (k1,k2) split by the tie columns) get
-    * the true group-min rank via a carry map. Returns (df + out column,
-    * allDistinct = every group is a singleton) — the doubling loop's
-    * convergence signal, free from the same stats.
-    *
-    * `tie` must make (k1, k2, tie…) a total order.
-    */
-  def withPairGroupMinRank(
-      df: DataFrame, k1: String, k2: String, tie: Seq[Column],
-      out: String, gen: Option[CheckpointGen] = None): (DataFrame, Boolean) =
-    withGroupMinRank(df, Seq(k1, k2), tie, out, gen)
-
-  /** [[withPairGroupMinRank]] generalized to 2..4 long key columns —
-    * one range exchange ranks a 32-byte packed prefix (4 words) exactly
-    * like the 16-byte pair, so the suffix sort's init covers two more
-    * doubling widths for free. `rnOut`, when set, additionally emits the
-    * GLOBAL row number of the scan order (off(pid) + local rn) — free
-    * from the same pass, and equal to row_number() OVER (ORDER BY keys…,
-    * tie…); the suffix sort's final rank is exactly that number of its
-    * last densify, so emitting it here removes the closing full-frame
-    * row-number exchange.
-    */
-  def withGroupMinRank(
-      df: DataFrame, keys: Seq[String], tie: Seq[Column],
-      out: String, gen: Option[CheckpointGen] = None,
-      rnOut: Option[String] = None): (DataFrame, Boolean) = {
-    require(keys.nonEmpty && keys.length <= 4, s"1..4 keys, got ${keys.length}")
-    val order = keys.map(col(_).asc) ++ tie
-    val local0 = sortedScan(df, order, Seq(pidField,
-      StructField("__lrn", LongType, nullable = false),
-      StructField("__new", BooleanType, nullable = false),
-      StructField("__gs", LongType, nullable = false))) { s =>
-      val idx = keys.map(s.fieldIndex).toArray
-      val k = idx.length
-      val pid = TaskContext.getPartitionId()
-      var n = 0L
-      var gs = 0L
-      val pk = new Array[Long](k)
-      r => {
-        n += 1L
-        var isNew = n == 1L
-        var i = 0
-        while (i < k) {
-          val v = r.getLong(idx(i))
-          if (v != pk(i)) isNew = true
-          pk(i) = v
-          i += 1
-        }
-        if (isNew) gs = n
-        Seq[Any](pid, n, isNew, gs)
-      }
-    }
-    // loop callers rotate this checkpoint so superseded generations are
-    // released (CheckpointGen contract); one-shot callers keep the plain
-    // eager checkpoint
-    val local = gen.map(_.rotate(local0)).getOrElse(local0.localCheckpoint(true))
-    val keyStruct = struct(keys.map(col): _*)
-    val stats = local.groupBy("__pid").agg(
-      count(lit(1)).as("n"),
-      min_by(keyStruct, col("__lrn")).as("fk"),
-      max_by(keyStruct, col("__lrn")).as("lk"),
-      max(when(col("__new"), col("__lrn"))).as("lastStart"),
-      sum(when(col("__new"), 1L).otherwise(0L)).as("nStarts"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        keys.indices.map(r.getStruct(2).getLong).toSeq,
-        keys.indices.map(r.getStruct(3).getLong).toSeq,
-        r.getLong(4), r.getLong(5)))
-      .sortBy(_._1)
-    if (stats.isEmpty)
-      return (df.withColumn(out, lit(1L)).limit(0), true)
-    var cum = 0L
-    var prevLast: Option[Seq[Long]] = None
-    var trueLastStart = 0L
-    var totalStarts = 0L
-    val offB = Map.newBuilder[Int, Long]
-    val carryB = Map.newBuilder[Int, Long]
-    for ((pid, n, fk, lk, lastStart, nStarts) <- stats) {
-      offB += pid -> cum
-      val continues = prevLast.contains(fk)
-      if (continues) carryB += pid -> trueLastStart
-      totalStarts += nStarts - (if (continues) 1L else 0L)
-      trueLastStart =
-        if (lastStart > 1L || !continues) cum + lastStart else trueLastStart
-      prevLast = Some(lk)
-      cum += n
-    }
-    val offsets = offB.result()
-    val carries = carryB.result()
-    val carry =
-      if (carries.isEmpty) lit(null).cast("long")
-      else element_at(typedLit(carries), col("__pid"))
-    val withMin = local
-      .withColumn(out,
-        when(carry.isNotNull && col("__gs") === 1L, carry)
-          .otherwise(col("__gs") +
-            element_at(typedLit(offsets), col("__pid"))))
-    val ranked = rnOut.fold(withMin) { rc =>
-      withMin.withColumn(rc,
-        col("__lrn") + element_at(typedLit(offsets), col("__pid")))
-    }.drop("__pid", "__lrn", "__new", "__gs")
-    (ranked, totalStarts == cum)
   }
 
   /** Dense ids (0, 1, …) for a TINY distinct set (group keys, tag ids):

@@ -565,7 +565,6 @@ object TextOps {
         concat(col(idCol).cast("string"), lit(":"), col(textCol))).as("h"))
     val cum = graft.runtime.Ranks.withGlobalCumsumLong(
       scored, Seq(col("src"), col("h"), col("id")), col("n_tokens"), "gcum")
-      .localCheckpoint(true) // feeds the per-domain totals AND the output
     val totals = cum.groupBy("src").agg(sum("n_tokens").as("t"))
       .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
     var run = 0L
@@ -648,10 +647,10 @@ object TextOps {
       : (Seq[(Long, String, String, Long, Long, Long)], DataFrame) = {
     val wc = docs.select(explode(tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-    var cur = wc.select(col("word"), col("cnt"),
+    val gen = new graft.runtime.CheckpointGen
+    var cur = gen.rotate(wc.select(col("word"), col("cnt"),
       expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-        .as("toks"))
-      .localCheckpoint(true)
+        .as("toks")))
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, Long, Long, Long)]
     var r = 1
@@ -670,15 +669,14 @@ object TextOps {
         val (t1, t2, n) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         val merged = t1 + t2
-        cur = cur.select(col("word"), col("cnt"),
+        cur = gen.rotate(cur.select(col("word"), col("cnt"),
           aggregate(col("toks"),
             array().cast("array<string>"),
             (acc, x) => when(
               size(acc) > 0 && element_at(acc, -1) === lit(t1) &&
                 x === lit(t2),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
-              .otherwise(concat(acc, array(x)))).as("toks"))
-          .localCheckpoint(true)
+              .otherwise(concat(acc, array(x)))).as("toks")))
         val stats = cur.agg(
           sum(size(col("toks")).cast("long")).as("v"),
           sum(size(col("toks")).cast("long") * col("cnt")).as("c")).head()

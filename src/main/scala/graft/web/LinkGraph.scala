@@ -76,8 +76,8 @@ object LinkGraph {
     * per-round integer semantics locally — identical outputs with ~2
     * driver round-trips instead of 2-3 per round of checkpoint latency
     * (guide §2.4; the same hybrid contract as ConnectedComponents'
-    * local union-find). The node count gates first (a cheap count) so
-    * an at-scale caller never pays the edge-count scan.
+    * local union-find). Both counts are taken in one job that stops
+    * reading past the limit, so an at-scale caller never pays a full scan.
     */
   val LocalMaxEdges = 500000L
 
@@ -91,17 +91,28 @@ object LinkGraph {
       : Option[org.apache.spark.sql.Dataset[(Boolean, Long, Long)]] = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    // the edges are checkpointed only once the local path is taken
     val gate = graft.runtime.Gate("web-local", localMax)
-    if (!gate.admits(nodes) || !gate.admits(edges)) return None
-    val e0 = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
+    // both counts in one job with no shuffle: each partition is read
+    // until either count passes the limit (the graph is then above it)
+    val (nNodes, nEdges) =
+      if (localMax == 0) (-1L, -1L)
+      else {
+        val seen = nodes.select(lit(true)).unionAll(edges.select(lit(false)))
+          .as[Boolean].mapPartitions { it =>
+            var (n, e) = (0L, 0L)
+            while (it.hasNext && n <= localMax && e <= localMax)
+              if (it.next()) n += 1 else e += 1
+            Iterator((n, e))
+          }.collect()
+        (seen.map(_._1).sum, seen.map(_._2).sum)
+      }
+    // `&`, not `&&`: the trace gets one decision per count
+    if (!(gate.admits(nNodes) & gate.admits(nEdges))) return None
     Some(nodes
       .select(lit(true).as("n"), col("doc_id").cast("long").as("a"),
         lit(0L).as("b"))
-      .unionByName(e0.select(lit(false).as("n"), col("src").as("a"),
-        col("dst").as("b")))
+      .unionByName(edges.select(lit(false).as("n"), col("src").cast("long").as("a"),
+        col("dst").cast("long").as("b")))
       .as[(Boolean, Long, Long)]
       .coalesce(1)) // narrow (no exchange): the one-task gate is the point
   }

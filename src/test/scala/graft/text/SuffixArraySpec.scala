@@ -87,17 +87,7 @@ class SuffixArraySpec extends AnyFunSuite with SparkTestBase {
     assert(r(6L) == ((0L, 0L, 0L)))
   }
 
-  test("packedPrefix8 preserves binary order; CommonPrefixLen exact") {
-    val ss = Seq("", "a", "ab", "abc", "abcdefgh", "abcdefghi", "abd",
-      "b", "zzzzzzzzz", "aa", "a b", "a\tb", "a\nb")
-    val packed = ss.map(s => s -> SuffixExprs.packedPrefix8(
-      UTF8String.fromString(s)))
-    for ((s1, p1) <- packed; (s2, p2) <- packed) {
-      val bytesCmp = math.signum(
-        s1.take(8).compareTo(s2.take(8))).toInt
-      assert(math.signum(java.lang.Long.compare(p1, p2)) == bytesCmp,
-        s"order mismatch for '$s1' vs '$s2'")
-    }
+  test("CommonPrefixLen exact") {
     def lcp(a: String, b: String): Long = SuffixExprs.commonPrefixChars(
       UTF8String.fromString(a), UTF8String.fromString(b))
     assert(lcp("", "") == 0L)
