@@ -108,7 +108,9 @@ object Bench {
       // must not fail a completed benchmark
       System.err.println(s"[bench] could not write $path: ${e.getMessage}")
     }
-    graft.queries.Derived.clearMemo() // deletes the staged stream files
+    // deletes the staged stream files; blocking, so no removal is still
+    // in flight when the session stops
+    graft.queries.Derived.clearMemo(blocking = true)
     spark.stop()
   }
 }

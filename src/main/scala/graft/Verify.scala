@@ -36,7 +36,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.queries.Derived.clearMemo() // deletes the staged stream files
+    // deletes the staged stream files; blocking, so no removal is still
+    // in flight when the session stops
+    graft.queries.Derived.clearMemo(blocking = true)
     spark.stop()
   }
 }

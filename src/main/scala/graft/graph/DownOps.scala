@@ -460,7 +460,7 @@ object DownOps {
     val labels = ConnectedComponents.run(
       e.select(col("csrc").as("src"), col("cdst").as("dst")),
       // one row per (src, dst, tag) input edge ⇒ packed pairs distinct;
-      // CC tolerates duplicates anyway (smallStar distincts round 1)
+      // CC tolerates duplicates anyway (its exchange merges them)
       assumeDistinct = true).labels
     e.join(labels.withColumnRenamed("nid", "csrc"), Seq("csrc"))
       .withColumn("tag_group_nid",

@@ -206,10 +206,12 @@ object Derived {
     computeIfAbsent(key)(f.localCheckpoint(true))
 
   /** Release every entry and drop it (Bench clears between reps, so each
-    * rep pays the full derivation cost). */
-  def clearMemo(): Unit = entries.synchronized {
+    * rep pays the full derivation cost). `blocking` waits until the
+    * blocks are gone: a caller about to stop the session sets it, since a
+    * removal still in flight at `stop` is rejected by the closing pool. */
+  def clearMemo(blocking: Boolean = false): Unit = entries.synchronized {
     entries.values.forEach { e =>
-      graft.runtime.CheckpointGen.release(e.rdds)
+      graft.runtime.CheckpointGen.release(e.rdds, blocking)
       e.release()
     }
     entries.clear()

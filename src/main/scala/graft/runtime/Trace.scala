@@ -30,11 +30,12 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * [[memoHit]]) costs one volatile read.
   *
   * The benchmark's own tracer (`perfbench/src/perfbench/Tracer.scala`)
-  * reads the same jobs from their stacks and leans on two code shapes:
+  * reads the same jobs from their stacks and leans on one code shape:
   * `Tracer.isMemo` matches the frame name `computeIfAbsent`, so
-  * `Derived` keeps that name; `Tracer.ccRounds` needs
-  * `ConnectedComponents.run`'s pre-loop `fingerprint` call to sit on an
-  * earlier source line than the in-loop one.
+  * `Derived` keeps that name. Its `Tracer.ccRounds` counts in-loop
+  * `fingerprint` jobs per SQL execution id; the star rounds are RDD
+  * actions, which carry no execution id, so it reads 1 on any forced
+  * loop. The [[rounds]] records here carry the true count.
   */
 final class Trace private (val sc: SparkContext) extends SparkListener {
   import Trace._
