@@ -7,44 +7,167 @@ import org.apache.spark.sql.functions._
 /** Distributed degree-2 chain contraction — the scale path for the
   * per-component operators whose local stage otherwise materializes a
   * whole component in one task (SURVEY §7.5.4; the round-3 percolated-run
-  * cliff). Contracts every maximal run of degree-2 vertexes not in the
-  * `keep` set into one edge carrying the interior node path, so a
-  * downstream `flatMapGroups` holds O(pillar graph) instead of
-  * O(component) — on chain-dominated river topology a 10-30× task-memory
-  * reduction with identical graph metric structure.
+  * cliff). Contracts every maximal run of chain nodes into one edge
+  * carrying the interior node path, so a downstream `flatMapGroups` holds
+  * O(pillar graph) instead of O(component) — on chain-dominated river
+  * topology a 10-30× task-memory reduction with identical graph metric
+  * structure.
+  *
+  * Every contraction runs one step, [[chains]]: a degree census, the
+  * caller's chain predicate over it, edges classified by their endpoints'
+  * chain flags, chain ids from the large/small-star CC over chain-chain
+  * edges ("Finding connected components in map-reduce in logarithmic
+  * rounds", ICDE 2013; PAPERS.md) under the guarded [[packedKey]], and
+  * every chain-incident edge routed to its chain id. Its callers differ
+  * only in the predicate and in what they do per chain:
+  *   - [[contract]]: undirected, degree 2 minus a keep set;
+  *   - [[contractDirected]]: in-degree 1 and out-degree 1, the D16 walk;
+  *   - `GraphBuild.compressedNumNodes`: the `num_nodes` closed form.
   *
   * SEMANTICS vs [[Local.compress]] (the reference's merge-order form,
   * undirected_graph.rs:640-716): `Local.compress` skips a merge that
   * would duplicate an existing edge or close a self loop, leaving
-  * merge-order-dependent partial chains on diamonds/cycles; this
-  * operator is the METRIC-PRESERVING variant — it always contracts the
-  * full run and emits a multigraph row per chain (parallel chains
-  * between one pillar pair stay two rows; a cycle through one pillar
-  * becomes a self-loop row). Shortest-path structure is identical; only
-  * consumers that need the reference's exact contracted-edge SET (P8
-  * betweenness σ counts) must keep the local form. On trees and chain
-  * forests — no duplicate/self-loop skips possible — the two forms emit
-  * the exact same canonical edge set (DistContractSpec pins it).
+  * merge-order-dependent partial chains on diamonds/cycles; [[contract]]
+  * is the METRIC-PRESERVING variant — it always contracts the full run
+  * and emits a multigraph row per chain (parallel chains between one
+  * pillar pair stay two rows; a cycle through one pillar becomes a
+  * self-loop row). Shortest-path structure is identical; only consumers
+  * that need the reference's exact contracted-edge SET (P8 betweenness σ
+  * counts) must keep the local form. On trees and chain forests — no
+  * duplicate/self-loop skips possible — the two forms emit the exact same
+  * canonical edge set (DistContractSpec pins it).
   *
-  * Every step is a deterministic function of the canonicalized edge set
-  * (CC labels are min-nid; walks orient from the least endpoint), so the
+  * Every step is a deterministic function of the deduplicated edge set
+  * (CC labels are min-key; walks orient from the least endpoint), so the
   * output is bit-identical at any parallelism (spec-pinned).
   *
-  * Shapes at scale: degree census + classification are map-combinable
-  * groupBys keyed by nid; chain identification reuses the large/small-star
-  * CC operator over chain-chain edges only (frontier-bounded rounds);
-  * the per-chain walk groups by chainId — task memory is O(longest
-  * chain), loudly guarded, not O(component).
+  * Shapes at scale: census and classification are map-combinable
+  * groupBys and joins keyed by (comp, nid); the chain CC sees chain-chain
+  * edges only; the per-chain walk groups by chain id — task memory is
+  * O(longest chain), loudly guarded, not O(component).
   */
 object DistContract {
+
+  /** Width of the nid part of a [[packedKey]]; the group index takes the
+    * 23 bits above it (OSM ids fit 40 bits for the foreseeable future). */
+  private[graft] val NidBits = 40
+  private[graft] val NidMask = (1L << NidBits) - 1
+
+  /** The one composite (group, nid) node key of every grouped CC:
+    * `gidx << 40 | nid`, so equal nids in different groups never merge
+    * (SURVEY C1: a node sits in different components per group). Loud on
+    * a group index outside [0, 2^23) — it would shift into the sign bit —
+    * and on a nid outside [0, 2^40) — it would spill into the group bits;
+    * either would silently merge or corrupt components.
+    */
+  private[graft] def packedKey(gidx: Column, nid: Column, what: String): Column = {
+    def inRange(c: Column, bits: Int, name: String) =
+      when(c.between(0L, (1L << bits) - 1), c).otherwise(raise_error(concat(
+        lit(s"$what: $name outside the $bits-bit range of the packed (group, nid) key: "),
+        c.cast("string"))))
+    shiftleft(inRange(gidx, 63 - NidBits, "group index"), NidBits)
+      .bitwiseOR(inRange(nid, NidBits, "nid"))
+  }
+
+  /** [[chains]]' output.
+    * @param census (comp, nid, chain) per edge endpoint, before `keep`
+    * @param pillar (comp, a, b, attrs…) edges with no chain endpoint
+    * @param routed (comp, chain, a, b, attrs…, ac, bc) every edge with a
+    *               chain endpoint (`ac`/`bc`), keyed by its chain's id
+    */
+  private[graph] final case class Chains(
+      census: DataFrame, pillar: DataFrame, routed: DataFrame)
+
+  /** The census → classify → chain-label → route step of every chain
+    * contraction.
+    *
+    * @param edges   (comp, a, b, attrs…) in the caller's orientation
+    *                (undirected callers canonicalize a <= b); duplicate
+    *                (comp, a, b) rows collapse first-wins
+    * @param isChain the caller's census predicate over `ind` / `outd`,
+    *                the counts of edges ending / starting at the node; a
+    *                node carrying a self loop is never a chain node
+    * @param keep    (comp, nid) nodes that stay pillars regardless
+    * @param assumeDistinct the caller holds `edges` distinct on (comp, a,
+    *                b) and materialized: skip the dedup and its checkpoint
+    * @param compsOpt a caller-held distinct comp frame for the dense group
+    *                index, instead of a comp-distinct shuffle
+    */
+  private[graph] def chains(
+      edges: DataFrame, isChain: Column, what: String,
+      keep: Option[DataFrame] = None,
+      assumeDistinct: Boolean = false,
+      compsOpt: Option[DataFrame] = None): Chains = {
+    val e = if (assumeDistinct) edges
+      else edges.dropDuplicates("comp", "a", "b").localCheckpoint(true)
+    val self = col("a") === col("b")
+    val census = e.select(col("comp"), col("b").as("nid"),
+        lit(1L).as("i"), lit(0L).as("o"), self.as("s"))
+      .unionAll(e.select(col("comp"), col("a").as("nid"),
+        lit(0L).as("i"), lit(1L).as("o"), self.as("s")))
+      .groupBy("comp", "nid")
+      .agg(sum("i").as("ind"), sum("o").as("outd"), max("s").as("self"))
+      .select(col("comp"), col("nid"), (isChain && !col("self")).as("chain"))
+    val candidates = census.filter(col("chain")).select("comp", "nid")
+    val chainNodes = keep
+      .fold(candidates)(k =>
+        candidates.join(k.select("comp", "nid"), Seq("comp", "nid"), "left_anti"))
+      .localCheckpoint(true)
+
+    val attrs = e.columns.filterNot(Set("comp", "a", "b")).toSeq
+    def flag(end: String, f: String) =
+      chainNodes.select(col("comp"), col("nid").as(end), lit(true).as(f))
+    val classified = e
+      .join(flag("a", "a_chain"), Seq("comp", "a"), "left")
+      .join(flag("b", "b_chain"), Seq("comp", "b"), "left")
+      .select((Seq("comp", "a", "b") ++ attrs).map(col) ++ Seq(
+        coalesce(col("a_chain"), lit(false)).as("ac"),
+        coalesce(col("b_chain"), lit(false)).as("bc")): _*)
+      .localCheckpoint(true)
+
+    // chain id = min packed key over chain-chain edges; a chain node with
+    // no chain neighbour labels itself. The key is COMP-AWARE: one nid can
+    // be a chain node in several groups (the LumpWays C1 situation)
+    val compIdx = graft.runtime.Ranks.tinyDenseId(
+      compsOpt.map(_.select("comp")).getOrElse(e.select("comp").distinct()),
+      Seq(col("comp")), "gidx")
+    def packed(nid: Column) = packedKey(col("gidx"), nid, what)
+    val cc = classified.filter(col("ac") && col("bc"))
+      .join(compIdx, Seq("comp"))
+      .select(packed(col("a")).as("src"), packed(col("b")).as("dst"))
+    val chainNodesP = chainNodes.join(compIdx, Seq("comp"))
+      .select(col("comp"), col("nid"), packed(col("nid")).as("cnid"))
+    val chainId =
+      if (cc.isEmpty) chainNodesP.select(col("comp"), col("nid"), col("cnid").as("chain"))
+      // cc derives from the deduplicated intake: the packed pairs are
+      // already distinct
+      else chainNodesP
+        .join(ConnectedComponents.run(cc, assumeDistinct = true).labels
+          .select(col("nid").as("cnid"), col("comp").as("chain")), Seq("cnid"), "left")
+        .select(col("comp"), col("nid"), coalesce(col("chain"), col("cnid")).as("chain"))
+
+    // an edge goes to the chain of its first chain endpoint: a chain-chain
+    // edge to ONE group, since both endpoints share it
+    val routed = classified.filter(col("ac") || col("bc"))
+      .withColumn("nid", when(col("ac"), col("a")).otherwise(col("b")))
+      .join(chainId, Seq("comp", "nid"))
+      .select((Seq("comp", "chain", "a", "b") ++ attrs ++ Seq("ac", "bc")).map(col): _*)
+    Chains(census,
+      classified.filter(!col("ac") && !col("bc")).drop("ac", "bc"), routed)
+  }
 
   /** @param edges (comp, src, dst) undirected; duplicates and self loops
     *              tolerated (canonical-deduped exactly like
     *              Local.compress's first-wins intake); nids must fit
-    *              40 bits (the packed chain-CC key — loudly checked),
-    *              the same contract LumpWays documents for OSM ids
+    *              40 bits ([[packedKey]] — loudly checked)
     * @param keep  (comp, nid) vertexes that must survive contraction
     *              (hull points, betweenness samples, user pins)
+    * @param assumeCanonical the caller already holds this edge set
+    *              canonical (src<=dst), distinct and materialized
+    *              (betweennessGrouped derives exactly that frame for its
+    *              size gate): skip the dedup and its checkpoint
+    * @param compsOpt a caller-held distinct comp frame (the size gate's
+    *              output) for [[chains]]' dense group index
     * @return (comp, src, dst, inter: array<long>) — src<=dst, inter
     *         oriented src→dst; self-loop rows have src==dst with inter
     *         oriented from the least adjacent interior node; input self
@@ -54,109 +177,18 @@ object DistContract {
       edges: DataFrame, keep: DataFrame, spark: SparkSession,
       what: String = "DistContract chain",
       assumeCanonical: Boolean = false,
-      keepKnownEmpty: Boolean = false,
       compsOpt: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
+    val c = chains(
+      edges.select(col("comp").cast("long"),
+        least(col("src"), col("dst")).cast("long").as("a"),
+        greatest(col("src"), col("dst")).cast("long").as("b")),
+      // Local.compress's census: a self loop counts twice, so only its
+      // node can sit at degree 2 through it — and that node stays a pillar
+      col("ind") + col("outd") === 2, what, Some(keep), assumeCanonical, compsOpt)
 
-    // assumeCanonical: the caller already holds this edge set canonical
-    // (src<=dst), distinct and materialized (betweennessGrouped derives
-    // exactly that frame for its size gate) — skip the redundant
-    // full-shuffle distinct + checkpoint (guide §2.4). keepKnownEmpty
-    // skips the keep anti-join when the caller statically passes no
-    // pillars to pin. compsOpt: a caller-held distinct comp frame (the
-    // size gate's output) replaces the comp-distinct shuffle feeding
-    // tinyDenseId.
-    val canon =
-      if (assumeCanonical)
-        edges.select(col("comp").cast("long"), col("src").cast("long").as("a"),
-          col("dst").cast("long").as("b"))
-      else edges
-        .select(col("comp").cast("long"),
-          least(col("src"), col("dst")).cast("long").as("a"),
-          greatest(col("src"), col("dst")).cast("long").as("b"))
-        .distinct()
-        .localCheckpoint(true)
-    val selfLoops = canon.filter(col("a") === col("b"))
-    val e = canon.filter(col("a") =!= col("b"))
-
-    // degree census mirrors Local.compress: distinct canon edges count 1
-    // per endpoint, self loops count 2
-    val deg = e.select(col("comp"), col("a").as("nid"))
-      .unionAll(e.select(col("comp"), col("b").as("nid")))
-      .unionAll(selfLoops.select(col("comp"), col("a").as("nid")))
-      .unionAll(selfLoops.select(col("comp"), col("a").as("nid")))
-      .groupBy("comp", "nid").agg(count(lit(1)).as("deg"))
-
-    val deg2 = deg.filter(col("deg") === 2)
-    val chainNodes = (if (keepKnownEmpty) deg2
-      else deg2.join(keep.select(col("comp"), col("nid")), Seq("comp", "nid"),
-        "left_anti"))
-      .select("comp", "nid")
-      .localCheckpoint(true)
-
-    val aChain = chainNodes.select(col("comp"), col("nid").as("a"),
-      lit(true).as("a_chain"))
-    val bChain = chainNodes.select(col("comp"), col("nid").as("b"),
-      lit(true).as("b_chain"))
-    val classified = e
-      .join(aChain, Seq("comp", "a"), "left")
-      .join(bChain, Seq("comp", "b"), "left")
-      .select(col("comp"), col("a"), col("b"),
-        coalesce(col("a_chain"), lit(false)).as("ac"),
-        coalesce(col("b_chain"), lit(false)).as("bc"))
-      .localCheckpoint(true)
-
-    val pp = classified.filter(!col("ac") && !col("bc"))
-      .select(col("comp"), col("a").as("src"), col("b").as("dst"),
-        array().cast("array<long>").as("inter"))
-
-    // chainId = min-composite-key CC label over chain-chain edges;
-    // singleton chain nodes (both neighbours pillars) label themselves.
-    // The CC and the routing join must be COMP-AWARE: betweennessGrouped
-    // contracts per WAY GROUP, and one nid can be a chain node in several
-    // groups (the LumpWays C1 situation) — a nid-only key would merge
-    // chains across groups. Same packed-composite contract as LumpWays:
-    // dense group index << 40 | nid, loud on nids above 2^40.
-    val compIdx = graft.runtime.Ranks.tinyDenseId(
-      compsOpt.map(_.select("comp")).getOrElse(canon.select("comp").distinct()),
-      Seq(col("comp")), "gidx")
-    // gidx guarded like nid: >2^23 distinct comps would shift into the
-    // sign bit and corrupt the chain-CC min labels — fail loudly instead
-    def packed(nid: Column) = shiftleft(
-      when(col("gidx").between(0, (1L << 23) - 1), col("gidx"))
-        .otherwise(raise_error(concat(
-          lit("DistContract: more than 2^23 distinct comps — the packed "),
-          lit("composite key would overflow; gidx="),
-          col("gidx").cast("string")))), 40).bitwiseOR(
-      when(nid.between(0, (1L << 40) - 1), nid).otherwise(raise_error(concat(
-        lit("DistContract: nid outside the 40-bit composite range: "),
-        nid.cast("string")))))
-    val cc = classified.filter(col("ac") && col("bc"))
-      .join(compIdx, Seq("comp"))
-      .select(packed(col("a")).as("src"), packed(col("b")).as("dst"))
-    val chainEdgeRows = classified.filter(col("ac") || col("bc"))
-    val chainNodesP = chainNodes.join(compIdx, Seq("comp"))
-      .select(col("comp"), col("nid"), packed(col("nid")).as("cnid"))
-    val labels =
-      if (cc.isEmpty) chainNodesP.select(col("cnid"), col("cnid").as("chain"))
-      // cc derives from the canonical-deduped `classified` frame — the
-      // packed pairs are already distinct
-      else ConnectedComponents.run(cc, assumeDistinct = true).labels
-        .select(col("nid").as("cnid"), col("comp").as("chain"))
-    val chainId = chainNodesP
-      .join(labels, Seq("cnid"), "left")
-      .select(col("comp"), col("nid"),
-        coalesce(col("chain"), col("cnid")).as("chain"))
-
-    // route every chain-incident edge to its chain's group; an inner
-    // (chain-chain) edge goes to ONE group — both endpoints share it
-    val routed = chainEdgeRows
-      .select(col("comp"), col("a"), col("b"), col("ac"), col("bc"),
-        when(col("ac"), col("a")).otherwise(col("b")).as("nid"))
-      .join(chainId, Seq("comp", "nid"))
+    val chainRows = c.routed
       .select("comp", "chain", "a", "b", "ac", "bc")
-
-    val chains = routed
       .as[(Long, Long, Long, Long, Boolean, Boolean)]
       .groupByKey(_._2)
       .flatMapGroups { (chain, rows0) =>
@@ -208,10 +240,114 @@ object DistContract {
       }
       .toDF("comp", "src", "dst", "inter")
 
-    pp.unionByName(
-        selfLoops.select(col("comp"), col("a").as("src"), col("a").as("dst"),
-          array().cast("array<long>").as("inter")))
-      .unionByName(chains)
+    // pillar-pillar edges, input self loops among them, pass through
+    c.pillar.select(col("comp"), col("a").as("src"), col("b").as("dst"),
+        array().cast("array<long>").as("inter"))
+      .unionByName(chainRows)
+  }
+
+  /** DIRECTED chain contraction — the D16 scale path. Contracts every
+    * maximal run of vertexes with in-degree 1 AND out-degree 1 (within
+    * their group) into one macro edge carrying the interior node path, the
+    * chain length (summed src→dst, the same op order as the single-task
+    * walk), and the attributes of the chain's FINAL constituent edge —
+    * `last_flow` / `last_src` — which are exactly what the D16
+    * grouped-waterways line walk (down/main.rs:1964-2004; our port in
+    * [[WaterwayFeatures.groupedWaterwayFeatures]]) consults when it picks
+    * an in-edge at a junction: interior chain nodes have exactly one
+    * in-edge, so the walk makes decisions ONLY at pillar vertexes, and a
+    * replay over the contracted multigraph visits constituent edges in
+    * the identical order (D16AtScaleSpec pins byte parity against the
+    * single-task port).
+    *
+    * Self-loop edges pass through as macro edges; vertexes carrying a
+    * self loop are never contracted. Directed pure cycles (every node
+    * in/out-degree 1, no pillar attachment) come out as `is_cycle` rows
+    * `src == dst == least node` — they are unreachable for the line walk
+    * and expand into the reference's per-edge fallback lines.
+    *
+    * @param edges (g, src, dst, len, flow) directed; (g, src, dst)
+    *              duplicates collapse first-wins like the local walk's
+    *              map intake; nids must fit 40 bits ([[packedKey]])
+    * @return (g, src, dst, inter: array<long> oriented src→dst,
+    *         len, last_flow, last_src, n_edges, is_cycle)
+    */
+  def contractDirected(
+      edges: DataFrame, spark: SparkSession,
+      what: String = "DistContract directed chain"): DataFrame = {
+    import spark.implicits._
+    val c = chains(
+      edges.select(col("g").cast("long").as("comp"),
+        col("src").cast("long").as("a"), col("dst").cast("long").as("b"),
+        col("len").cast("double"), col("flow").cast("double")),
+      col("ind") === 1 && col("outd") === 1, what)
+
+    val chainRows = c.routed
+      .select("chain", "comp", "a", "b", "len", "flow", "ac", "bc")
+      .as[(Long, Long, Long, Long, Double, Double, Boolean, Boolean)]
+      .groupByKey(_._1)
+      .flatMapGroups { (chain, it) =>
+        val rows = Local.boundedSeq(it, s"$what (chain $chain)")
+        val g = rows.head._2
+        // out-edge per chain node (out-degree exactly 1 by construction)
+        val nextE = mutable.HashMap.empty[Long, (Long, Double, Double, Boolean)]
+        val entries = mutable.ArrayBuffer.empty[(Long, Long, Double, Double)]
+        rows.foreach { case (_, _, s, d, l, f, isSc, isDc) =>
+          if (isSc) nextE(s) = (d, l, f, isDc)
+          else entries += ((s, d, l, f)) // pillar → first chain node
+        }
+        if (entries.length > 1)
+          throw new IllegalStateException(
+            s"$what $chain: ${entries.length} entry edges into one " +
+              "directed chain — census and classification disagree")
+        entries.headOption match {
+          case Some((p0, c0, l0, _)) =>
+            // path (or cycle through one pillar): walk src→dst
+            val inter = mutable.ArrayBuffer(c0)
+            var lenSum = l0
+            var cur = c0
+            var res: Option[(Long, Long, Long, Seq[Long], Double, Double, Long, Long, Boolean)] =
+              None
+            while (res.isEmpty) {
+              val (d, l, f, dIsChain) = nextE.getOrElse(cur,
+                throw new IllegalStateException(
+                  s"$what $chain: chain node $cur has no out-edge"))
+              lenSum += l
+              if (dIsChain) { inter += d; cur = d }
+              else res = Some((g, p0, d, inter.toSeq, lenSum,
+                f, cur, inter.length + 1L, false))
+            }
+            res.iterator
+          case None =>
+            // directed pure cycle: orient from the least node
+            val m = nextE.keys.min
+            val inter = mutable.ArrayBuffer.empty[Long]
+            val (d0, l0, f0, _) = nextE(m)
+            var cur = d0
+            var lenSum = l0
+            var lastF = f0
+            var lastS = m
+            while (cur != m) {
+              inter += cur
+              val (d, l, f, _) = nextE(cur)
+              lenSum += l
+              lastF = f
+              lastS = cur
+              cur = d
+            }
+            Iterator.single((g, m, m, inter.toSeq, lenSum, lastF, lastS,
+              inter.length + 1L, true))
+        }
+      }
+      .toDF("g", "src", "dst", "inter", "len", "last_flow", "last_src",
+        "n_edges", "is_cycle")
+
+    // pillar-pillar edges pass through one-to-one
+    c.pillar.select(col("comp").as("g"), col("a").as("src"), col("b").as("dst"),
+        array().cast("array<long>").as("inter"), col("len"),
+        col("flow").as("last_flow"), col("a").as("last_src"),
+        lit(1L).as("n_edges"), lit(false).as("is_cycle"))
+      .unionByName(chainRows)
   }
 
   /** Turn [[contract]]'s metric-preserving MULTIGRAPH into a SIMPLE

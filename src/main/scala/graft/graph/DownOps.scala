@@ -455,8 +455,8 @@ object DownOps {
     val tags = graft.runtime.Ranks.tinyDenseId(
       keyed.select("__tagc").distinct(), Seq(col("__tagc")), "tid")
     val e = keyed.join(tags, Seq("__tagc")).drop("__tagc")
-      .withColumn("csrc", shiftleft(col("tid"), 40).bitwiseOR(col("src")))
-      .withColumn("cdst", shiftleft(col("tid"), 40).bitwiseOR(col("dst")))
+      .withColumn("csrc", DistContract.packedKey(col("tid"), col("src"), "tagGroupCC"))
+      .withColumn("cdst", DistContract.packedKey(col("tid"), col("dst"), "tagGroupCC"))
     val labels = ConnectedComponents.run(
       e.select(col("csrc").as("src"), col("cdst").as("dst")),
       // one row per (src, dst, tag) input edge ⇒ packed pairs distinct;
@@ -464,7 +464,7 @@ object DownOps {
       assumeDistinct = true).labels
     e.join(labels.withColumnRenamed("nid", "csrc"), Seq("csrc"))
       .withColumn("tag_group_nid",
-        col("comp").bitwiseAND(lit((1L << 40) - 1)))
+        col("comp").bitwiseAND(lit(DistContract.NidMask)))
       .select("src", "dst", "tag", "tag_group_nid")
   }
 

@@ -261,7 +261,7 @@ object GraphBuild {
     * validated row-exact against `Local.compress` over every sf0.01
     * component):
     *
-    *   pillars (degree ≠ 2 in the contracted graph)
+    *   pillars (degree ≠ 2 in the contracted graph, or on a self loop)
     *   + per parallel-chain family (p, q): C − 1 + [direct edge exists]
     *     (one chain of the family fully compresses unless a direct edge
     *     blocks it; every other chain keeps exactly one survivor)
@@ -316,64 +316,33 @@ object GraphBuild {
   }
 
   /** The distributed closed form over pre-canonicalized (comp, src, dst)
-    * edges — see [[compressedNumNodes]].
+    * edges — see [[compressedNumNodes]]. Pillars and chains come from
+    * [[DistContract.chains]] (degree-2 nodes, no keep set); a chain's
+    * attachments are its routed rows with exactly one chain endpoint.
     */
   private[graph] def compressedNumNodesDist(edges: DataFrame): DataFrame = {
-    val e = edges
-    val deg = e.select(col("comp"), col("src").as("nid"))
-      .union(e.select(col("comp"), col("dst").as("nid")))
-      .groupBy("comp", "nid").agg(count(lit(1)).as("d"))
-    val pillars = deg.filter(col("d") =!= 2)
-      .groupBy("comp").agg(count(lit(1)).as("p"))
-    val intn = deg.filter(col("d") === 2).select("comp", "nid")
-    // interior-chain labels: components are vertex-disjoint, so one
-    // global CC over the degree-2-induced subgraph labels every chain;
-    // isolated interior nodes (single-vertex chains) self-label
-    val inte = e
-      .join(intn.withColumnRenamed("nid", "src"), Seq("comp", "src"), "left_semi")
-      .join(intn.withColumnRenamed("nid", "dst"), Seq("comp", "dst"), "left_semi")
-    val icLabels = ConnectedComponents
-      // input contract: canonical deduplicated edges — semi-joins keep
-      // distinctness
-      .run(inte.select("src", "dst"), assumeDistinct = true).labels
-      .withColumnRenamed("comp", "ic")
-    val ic = intn.join(icLabels, Seq("nid"), "left")
-      .select(col("comp"), col("nid"), coalesce(col("ic"), col("nid")).as("ic"))
-    // attachments: interior node → pillar neighbour
-    val pilN = deg.filter(col("d") =!= 2).select("comp", "nid")
-    val icSrc = ic.select(col("comp"), col("nid").as("src"), col("ic"))
-    val icDst = ic.select(col("comp"), col("nid").as("dst"), col("ic"))
-    val att = e
-      .join(icSrc, Seq("comp", "src"))
-      .join(pilN.withColumnRenamed("nid", "dst"), Seq("comp", "dst"), "left_semi")
-      .select(col("comp"), col("ic"), col("dst").as("pillar"))
-      .union(e
-        .join(icDst, Seq("comp", "dst"))
-        .join(pilN.withColumnRenamed("nid", "src"), Seq("comp", "src"), "left_semi")
-        .select(col("comp"), col("ic"), col("src").as("pillar")))
-    val allIcs = ic.select("comp", "ic").distinct()
-    val ica = allIcs.join(att, Seq("comp", "ic"), "left")
-      .groupBy("comp", "ic").agg(
-        count(col("pillar")).as("natt"),
-        min("pillar").as("p1"), max("pillar").as("p2"))
-    val chains = ica.filter(col("natt") === 2 && col("p1") =!= col("p2"))
+    val c = DistContract.chains(
+      edges.select(col("comp"), col("src").as("a"), col("dst").as("b")),
+      col("ind") + col("outd") === 2, "num_nodes chain")
+    val pillars = c.census.groupBy("comp")
+      .agg(count(when(!col("chain"), 1)).as("p"))
+    val pillarEnd = when(col("ac") =!= col("bc"),
+      when(col("ac"), col("b")).otherwise(col("a")))
+    val att = c.routed.groupBy("comp", "chain").agg(
+      count(pillarEnd).as("natt"), min(pillarEnd).as("p1"), max(pillarEnd).as("p2"))
+    // a pillar-pillar edge blocks the full compression of one chain of
+    // its family
+    val direct = c.pillar
+      .select(col("comp"), col("a").as("p1"), col("b").as("p2"), lit(1L).as("hasDirect"))
+    val extras = att.filter(col("natt") === 2 && col("p1") =!= col("p2"))
       .groupBy("comp", "p1", "p2").agg(count(lit(1)).as("c"))
-    val direct = e.select(col("comp"), col("src").as("p1"), col("dst").as("p2"))
-      .distinct().withColumn("hasDirect", lit(1L))
-    val extras = chains
       .join(direct, Seq("comp", "p1", "p2"), "left")
       .select(col("comp"),
         (col("c") - 1 + coalesce(col("hasDirect"), lit(0L))).as("surv"))
-      .union(ica.filter(col("natt") === 2 && col("p1") === col("p2"))
-        .select(col("comp"), lit(2L).as("surv")))
-      .union(ica.filter(col("natt") === 0)
-        .select(col("comp"), lit(3L).as("surv")))
+      .unionByName(att.filter(col("natt") === 0 || col("p1") === col("p2"))
+        .select(col("comp"), when(col("natt") === 0, 3L).otherwise(2L).as("surv")))
       .groupBy("comp").agg(sum("surv").as("x"))
-    e.select("comp").distinct()
-      .join(pillars, Seq("comp"), "left")
-      .join(extras, Seq("comp"), "left")
-      .select(col("comp"),
-        (coalesce(col("p"), lit(0L)) + coalesce(col("x"), lit(0L)))
-          .as("num_nodes"))
+    pillars.join(extras, Seq("comp"), "left")
+      .select(col("comp"), (col("p") + coalesce(col("x"), lit(0L))).as("num_nodes"))
   }
 }

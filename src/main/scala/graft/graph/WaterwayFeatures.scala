@@ -275,7 +275,7 @@ object WaterwayFeatures {
     * @param sizeThreshold HYBRID gate (the frames pattern): groups ≤ this
     *        many edges run the exact single-task walk (byte parity with
     *        the pinned fixtures); bigger groups take the scale path —
-    *        directed chain contraction ([[DistContractDir]]) → pillar
+    *        directed chain contraction ([[DistContract.contractDirected]]) → pillar
     *        replay of the line walk (decisions only happen at junctions,
     *        so the replay visits constituent edges in the identical
     *        order) → distributed chain expansion and per-line rendering.
@@ -358,55 +358,23 @@ object WaterwayFeatures {
         val cum = es.map(_._5).sum
         if (minLen.exists(cum < _)) Iterator.empty
         else {
-          // line walk (main.rs:1964-2004): start at end segments (no
-          // same-group out-edge at dst), follow unused in-edges of the
-          // same group; branches queue as new line starts. Deterministic
-          // in-edge pick: (flow desc, src asc).
-          val srcSet = es.map(_._2).toSet
-          val used = scala.collection.mutable.HashSet.empty[(Long, Long)]
-          val byDst = es.groupBy(_._3)
-          val ends = es.filterNot(x => srcSet.contains(x._3))
-            .map(x => (x._2, x._3)).sortBy(identity)
-          val stack = scala.collection.mutable.Stack
-            .empty[(Long, Long)]
-          stack.pushAll(ends.reverse)
-          val lines = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
-          while (stack.nonEmpty) {
-            var seg = stack.pop()
-            if (!used(seg)) {
-              val line = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-              var continue = true
-              while (continue) {
-                if (used(seg)) continue = false
-                else {
-                  line += seg
-                  used += seg
-                  val ins = byDst.getOrElse(seg._1, Nil)
-                    .map(x => (x._2, x._3, x._4))
-                    .filterNot(x => used((x._1, x._2)))
-                    .sortBy(x => (-x._3, x._1))
-                  if (ins.isEmpty) continue = false
-                  else {
-                    stack.pushAll(ins.drop(1).map(x => (x._1, x._2)).reverse)
-                    seg = (ins.head._1, ins.head._2)
-                  }
-                }
-              }
-              if (line.nonEmpty) lines += (line.last._1 +: line.reverse.map(_._2).toSeq)
-            }
-          }
-          // any edges unreachable from an end segment (pure cycles —
-          // contracted earlier, but be safe): one 2-point line each
-          es.filterNot(x => used((x._2, x._3))).sortBy(x => (x._2, x._3))
-            .foreach(x => lines += Seq(x._2, x._3))
+          // the line walk over identity macros (lastSrc = src, lastFlow =
+          // flow); duplicate (src, dst) rows share one id, so they count
+          // as one edge. Edges no line reaches (pure cycles) become one
+          // 2-point line each, by (src, dst)
+          val ids = scala.collection.mutable.HashMap.empty[(Long, Long), Int]
+          val (walked, unreached) = walkLines(es.map(x =>
+            PillarEdge(ids.getOrElseUpdate((x._2, x._3), ids.size),
+              x._2, x._3, x._5, x._4, x._2, cyc = false)))
+          val lines = walked.map(l => l.head.src +: l.map(_.dst)) ++
+            unreached.sortBy(m => (m.src, m.dst)).map(m => Seq(m.src, m.dst))
 
-          val flowsMap = es.map(x => ((x._2, x._3), x._4)).toMap
-          val lensMap = es.map(x => ((x._2, x._3), x._5)).toMap
           val ups = es.map(_._4)
           // through-path: max over sources of shortest dist to a sink
           // (floods from the smaller endpoint side). Set membership, not
           // es.exists — the linear scan per node is O(V·E) on big groups.
           val dstSet = es.iterator.map(_._3).toSet
+          val srcSet = es.iterator.map(_._2).toSet
           val srcs = es.map(_._2).distinct.filterNot(dstSet.contains)
           val sinks = es.map(_._3).distinct.filterNot(srcSet.contains)
           val through = DownOps.throughPathLength(
@@ -447,6 +415,48 @@ object WaterwayFeatures {
       id: Int, src: Long, dst: Long, len: Double,
       lastFlow: Double, lastSrc: Long, cyc: Boolean)
 
+  /** The D16 line walk (down/main.rs:1964-2004) over macro edges: start
+    * at end segments (no out-edge at dst) by (lastSrc, dst), follow unused
+    * in-edges picking (lastFlow desc, lastSrc asc), and queue the other
+    * in-edges as new line starts. Edges with one `id` count as one edge.
+    * @return the lines, each upstream first, and the edges no line
+    *         reached (every cycle macro among them)
+    */
+  private def walkLines(ms: Seq[PillarEdge]): (Seq[Seq[PillarEdge]], Seq[PillarEdge]) = {
+    val walkable = ms.filterNot(_.cyc)
+    val srcSet = walkable.map(_.src).toSet
+    val byDst = walkable.groupBy(_.dst)
+    val used = scala.collection.mutable.HashSet.empty[Int]
+    val stack = scala.collection.mutable.Stack.empty[PillarEdge]
+    stack.pushAll(walkable.filterNot(m => srcSet.contains(m.dst))
+      .sortBy(m => (m.lastSrc, m.dst)).reverse)
+    val lines = scala.collection.mutable.ArrayBuffer.empty[Seq[PillarEdge]]
+    while (stack.nonEmpty) {
+      var seg = stack.pop()
+      if (!used(seg.id)) {
+        val line = scala.collection.mutable.ArrayBuffer.empty[PillarEdge]
+        var continue = true
+        while (continue) {
+          if (used(seg.id)) continue = false
+          else {
+            line += seg
+            used += seg.id
+            val ins = byDst.getOrElse(seg.src, Seq.empty)
+              .filterNot(m => used(m.id))
+              .sortBy(m => (-m.lastFlow, m.lastSrc))
+            if (ins.isEmpty) continue = false
+            else {
+              stack.pushAll(ins.drop(1).reverse)
+              seg = ins.head
+            }
+          }
+        }
+        if (line.nonEmpty) lines += line.reverse.toSeq
+      }
+    }
+    (lines.toSeq, ms.filter(m => m.cyc || !used(m.id)))
+  }
+
   /** D16 scale path for groups above the hybrid gate: directed chain
     * contraction → per-group pillar replay of the reference's line walk
     * (identical constituent-edge order: interior chain nodes have exactly
@@ -486,7 +496,7 @@ object WaterwayFeatures {
     val passCum = minLen.map(m => stats.filter(col("cum") >= m)).getOrElse(stats)
     val eKept = e.join(passCum.select("g"), Seq("g"), "left_semi")
 
-    val contracted = DistContractDir.contract(eKept, spark, "D16 contraction")
+    val contracted = DistContract.contractDirected(eKept, spark, "D16 contraction")
       .localCheckpoint(true)
 
     // pillar replay per group: the walk + through-path over macro edges
@@ -501,40 +511,7 @@ object WaterwayFeatures {
           .zipWithIndex
           .map { case ((_, s, d, l, f, ls, cyc), i) =>
             PillarEdge(i, s, d, l, f, ls, cyc) }
-        val walkable = ms.filterNot(_.cyc)
-        val srcSet = walkable.map(_.src).toSet
-        val byDst = walkable.groupBy(_.dst)
-        val used = scala.collection.mutable.HashSet.empty[Int]
-        val stack = scala.collection.mutable.Stack.empty[PillarEdge]
-        // end segments = macros whose dst has no out-edge, by the flat
-        // walk's (edge src, edge dst) = (lastSrc, dst) sort
-        stack.pushAll(walkable.filterNot(m => srcSet.contains(m.dst))
-          .sortBy(m => (m.lastSrc, m.dst)).reverse)
-        val lines = scala.collection.mutable.ArrayBuffer.empty[Seq[PillarEdge]]
-        while (stack.nonEmpty) {
-          var seg = stack.pop()
-          if (!used(seg.id)) {
-            val line = scala.collection.mutable.ArrayBuffer.empty[PillarEdge]
-            var continue = true
-            while (continue) {
-              if (used(seg.id)) continue = false
-              else {
-                line += seg
-                used += seg.id
-                val ins = byDst.getOrElse(seg.src, Seq.empty)
-                  .filterNot(m => used(m.id))
-                  .sortBy(m => (-m.lastFlow, m.lastSrc))
-                if (ins.isEmpty) continue = false
-                else {
-                  stack.pushAll(ins.drop(1).reverse)
-                  seg = ins.head
-                }
-              }
-            }
-            if (line.nonEmpty) lines += line.reverse.toSeq
-          }
-        }
-        val leftovers = ms.filter(m => m.cyc || !used(m.id))
+        val (lines, leftovers) = walkLines(ms)
         val dstSet = ms.map(_.dst).toSet
         val allSrc = ms.map(_.src).toSet
         val msrcs = ms.map(_.src).distinct.filterNot(dstSet)

@@ -305,14 +305,14 @@ object Extras {
       bigGroupsOpt: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     // `big` arrives canonical+distinct from the caller's shared frame;
-    // no pillars are pinned, and the size gate's comp list seeds the
+    // no pillars are pinned (Catalyst drops the anti-join against the
+    // empty local keep frame), and the size gate's comp list seeds the
     // dense comp ids — three shuffles DistContract no longer repeats
     val contracted = graft.graph.DistContract.simplify(
       graft.graph.DistContract.contract(
         big, Seq.empty[(Long, Long)].toDF("comp", "nid"), spark,
         "P8 betweenness contraction",
-        assumeCanonical = true, keepKnownEmpty = true,
-        compsOpt = bigGroupsOpt), spark)
+        assumeCanonical = true, compsOpt = bigGroupsOpt), spark)
     chainWeighted(contracted, nodes)
       .as[(Long, Long, Long, Seq[Long], Double,
         Double, Double, Double, Double)]

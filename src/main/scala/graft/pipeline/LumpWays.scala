@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.graph.{ConnectedComponents, GraphBuild, Local}
+import graft.graph.{ConnectedComponents, DistContract, GraphBuild, Local}
 import graft.geo.Geo
 import graft.outputs.GeoJson
 import graft.tagfilter.{TagFilter, TagFilterCompiler, TagFilterFunc}
@@ -74,13 +74,6 @@ object LumpWays {
       // into_lines_random walk is unseeded-RNG).
       shardThresholdEdges: Long = 2000000L)
 
-  /** Composite (group id, node id) packed into one Long for the CC key —
-    * group graphs are independent (SURVEY C1: a node can sit in different
-    * components per group tuple).
-    */
-  private val NidBits = 40
-  private val NidMask = (1L << NidBits) - 1
-
   final case class Feature(
       comp: Long,
       tagGroups: Seq[String],
@@ -136,15 +129,15 @@ object LumpWays {
     val wg = withGroup.join(groups, Seq("grp"))
       .select("wid", "nids", "gid").localCheckpoint(true)
 
-    // 2-3. census + contraction per group (nids must fit 40 bits for the
-    // composite CC key; OSM ids are < 2^40 for the foreseeable future)
+    // 2-3. census + contraction per group
     val edges = GraphBuild.canonicalUndirectedKeyed(
       GraphBuild.contractedEdgesKeyed(wg, spark))
 
-    // 4. CC on composite ids
+    // 4. CC on composite (group, nid) ids — group graphs are independent
+    // (SURVEY C1); nids outside 40 bits fail loudly here
     val composite = edges
-      .withColumn("csrc", shiftleft(col("gid"), NidBits).bitwiseOR(col("src")))
-      .withColumn("cdst", shiftleft(col("gid"), NidBits).bitwiseOR(col("dst")))
+      .withColumn("csrc", DistContract.packedKey(col("gid"), col("src"), "LumpWays"))
+      .withColumn("cdst", DistContract.packedKey(col("gid"), col("dst"), "LumpWays"))
     val labels = ConnectedComponents.run(
       composite.select(col("csrc").as("src"), col("cdst").as("dst")),
       // canonical dedup guarantees one row per (gid, src, dst): the
@@ -163,14 +156,14 @@ object LumpWays {
     val compLen = withLen.groupBy("comp").agg(sum("hv").as("length_m"))
 
     val lens0 = compLen
-      .withColumn("root_nodeid", col("comp").bitwiseAND(lit(NidMask)))
-      .withColumn("gid", shiftright(col("comp"), NidBits))
+      .withColumn("root_nodeid", col("comp").bitwiseAND(lit(DistContract.NidMask)))
+      .withColumn("gid", shiftright(col("comp"), DistContract.NidBits))
       .join(groups, Seq("gid"))
     // C6 — keep only components containing a wanted nid (main.rs:523-536)
     val lens = (if (cfg.onlyNodeids.isEmpty) lens0
       else {
         val wanted = labels
-          .filter(col("nid").bitwiseAND(lit(NidMask))
+          .filter(col("nid").bitwiseAND(lit(DistContract.NidMask))
             .isin(cfg.onlyNodeids: _*))
           .select("comp").distinct()
         lens0.join(wanted, Seq("comp"), "left_semi")

@@ -23,6 +23,18 @@ final class IterationCheckpointer(spark: SparkSession, dir: String) {
   private def roundDir(round: Int): String = f"$dir/round=$round%05d"
   private def metricsPath(round: Int) = Paths.get(s"${roundDir(round)}/_METRICS.json")
 
+  /** Indexes of the complete rounds under `dir`, ascending. */
+  private def completeRounds(): Seq[Int] = {
+    val base = Paths.get(dir)
+    if (!Files.isDirectory(base)) Nil
+    else scala.util.Using.resource(Files.list(base))(_.toArray.toSeq)
+      .map(_.toString)
+      .filter(_.matches(".*round=\\d{5}$"))
+      .map(p => p.substring(p.length - 5).toInt)
+      .filter(r => Files.exists(metricsPath(r)))
+      .sorted
+  }
+
   /** Persist one round of state; returns the reloaded (lineage-free) frame. */
   def save(round: Int, df: DataFrame): DataFrame = {
     val path = roundDir(round)
@@ -49,16 +61,7 @@ final class IterationCheckpointer(spark: SparkSession, dir: String) {
     * complete round index plus one frame scanning all complete rounds.
     */
   def allComplete(): Option[(Int, DataFrame)] = {
-    val base = Paths.get(dir)
-    if (!Files.isDirectory(base)) return None
-    val rounds = Files
-      .list(base)
-      .toArray
-      .map(_.toString)
-      .filter(_.matches(".*round=\\d{5}$"))
-      .map(p => p.substring(p.length - 5).toInt)
-      .filter(r => Files.exists(metricsPath(r)))
-      .sorted
+    val rounds = completeRounds()
     if (rounds.isEmpty) None
     else {
       // delta resume is only sound over a CONTIGUOUS 0..last prefix — a
@@ -76,17 +79,7 @@ final class IterationCheckpointer(spark: SparkSession, dir: String) {
 
   /** Newest round with a complete checkpoint, if any. */
   def latestComplete(): Option[(Int, DataFrame)] = {
-    val base = Paths.get(dir)
-    if (!Files.isDirectory(base)) return None
-    val rounds = Files
-      .list(base)
-      .toArray
-      .map(_.toString)
-      .filter(_.matches(".*round=\\d{5}$"))
-      .map(p => p.substring(p.length - 5).toInt)
-      .filter(r => Files.exists(metricsPath(r)))
-      .sorted
-    rounds.lastOption.map(r => (r, spark.read.parquet(roundDir(r))))
+    completeRounds().lastOption.map(r => (r, spark.read.parquet(roundDir(r))))
   }
 
   /** Hook shape expected by the iterative operators. */

@@ -509,7 +509,7 @@ object ScaleEvidence {
     betweennessEntry("betweenness-cyclic", "cyclic", ringComb),
 
     // D16 grouped waterways on one river-comb tag group: single-task walk
-    // vs DistContractDir scale path, byte-for-byte at parity size
+    // vs DistContract.contractDirected scale path, byte-for-byte at parity size
     Entry[Graph]("d16-walk", "d16_walk_at_scale", 1500L, 24L,
       (spark, k) => {
         val e = ckpt(riverComb(spark, k))

@@ -128,7 +128,7 @@ class D16AtScaleSpec extends AnyFunSuite with SparkTestBase {
       // same nids, different group: contract independently
       (1L, 2L, 3L, 8.0, 8.0))
       .toDF("g", "src", "dst", "len", "flow")
-    val got = DistContractDir.contract(es, spark).collect()
+    val got = DistContract.contractDirected(es, spark).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getSeq[Long](3).toList, r.getDouble(4), r.getDouble(5),
         r.getLong(6), r.getLong(7), r.getBoolean(8)))

@@ -53,6 +53,22 @@ class DistPeelSpec extends AnyFunSuite with SparkTestBase {
       assert(distNumNodes(edges) == localNumNodes(edges), name)
     }
 
+  test("compressedNumNodes matches Local.compress: components sharing chain nids") {
+    // component 1: parallel chains 100-1-101 and 100-2-101 plus the direct
+    // edge; component 2: the path 50-1-2-51 through the same chain nids
+    val comps = Seq(
+      1L -> Seq((1L, 100L), (1L, 101L), (2L, 100L), (2L, 101L), (100L, 101L)),
+      2L -> Seq((1L, 50L), (1L, 2L), (2L, 51L)))
+    val df = comps.flatMap { case (c, es) => es.map(e => (c, e._1, e._2)) }
+      .toDF("comp", "src", "dst")
+    val want = comps.map { case (c, es) => c -> localNumNodes(es) }.toMap
+    for (limit <- Seq(0L, 2000000L)) {
+      val got = GraphBuild.compressedNumNodes(df, localPerCompMax = limit)
+        .collect().map(r => r.getAs[Long]("comp") -> r.getAs[Long]("num_nodes")).toMap
+      assert(got == want, s"localPerCompMax $limit")
+    }
+  }
+
   test("compressedNumNodes on a seeded random multi-component graph") {
     val rng = new scala.util.Random(7)
     val edges = (0 until 400).map { _ =>

@@ -22,7 +22,6 @@ class CheckpointCensusSpec extends AnyFunSuite {
     "dedup/Pq.scala" -> 1,
     "geo/SpatialJoins.scala" -> 3,
     "graph/DistContract.scala" -> 3,
-    "graph/DistContractDir.scala" -> 3,
     "graph/DistHull.scala" -> 1,
     "graph/DistLongest.scala" -> 2,
     "graph/DistPeel.scala" -> 2,
