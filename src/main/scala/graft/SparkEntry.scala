@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import org.apache.spark.sql.functions._
 import graft.queries._
 import graft.queries.Derived
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.SpatialJoins
 import graft.graph.{DownOps, Flow, Rescans, Scc, WaterwayFeatures}
-import graft.outputs.{GeoJson, Writers}
+import graft.outputs.Writers
 import graft.pipeline.Extras
 import graft.tagfilter.TagFilterCompiler
 

@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.pipeline.LumpWays
 import graft.outputs.{GeoJson, Writers}
 

@@ -146,28 +146,15 @@ object Dedup {
       .otherwise(array(concat_ws(" ", toks)))
   }
 
-  /** Shingle-hash array — materialise this ONCE per row (a projection
-    * column) before fanning out into the signature: referencing the raw
-    * text expression 64× re-tokenises 64× per row. A fused native
-    * expression (graft.functions.ShingleHashes): the HOF form
-    * ([[shingleHashesHof]]) is five nested interpreted higher-order
-    * functions allocating a shingle string per window; the native one
-    * tokenizes the UTF-8 bytes once and streams each window into the
-    * digest. Bit-identical (TextHashExprsSpec), oracles unchanged.
-    */
-  def shingleHashes(text: Column, w: Int = 3): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.ShingleHashes(
-        org.apache.spark.sql.GraftColumnBridge.expression(text), w,
-        distinct = false))
-
-  /** HOF formulation of [[shingleHashes]] — the spec's equivalence oracle. */
+  /** HOF formulation of the shingle-hash array (every window, in order)
+    * that [[graft.functions.ShingleHashes]] computes natively — the
+    * spec's equivalence oracle. */
   private[graft] def shingleHashesHof(text: Column, w: Int = 3): Column =
     transform(shingles(text, w), s => md5h32(s))
 
   /** Winnowing fingerprints (Schleimer–Wilkerson–Aiken, SIGMOD 2003):
     * minimum w-gram hash per sliding window of `win` grams, rightmost on
-    * ties — the MOSS local fingerprint. Unlike [[shingleHashes]]-based
+    * ties — the MOSS local fingerprint. Unlike shingle-hash
     * MinHash (a whole-document sketch) this selects POSITIONED grams
     * with the guarantee that any shared token run of length ≥ w+win−1
     * produces a shared fingerprint, keeping only ~2/(win+1) of grams —
@@ -252,12 +239,6 @@ object Dedup {
     array(cols: _*)
   }
 
-  /** MinHash signature straight from text (convenience; for hot paths
-    * stage [[shingleHashes]] as its own column first).
-    */
-  def minhashSignature(text: Column, numHashes: Int = 64, w: Int = 3): Column =
-    minhashSignatureFromHashes(shingleHashes(text, w), numHashes)
-
   /** LSH band keys: split the signature into `bands` rows of
     * numHashes/bands values; each band hashes to one bucket key — the
     * 63-bit md5 prefix ([[md5h63]]) of the comma-joined values. A LONG
@@ -279,21 +260,13 @@ object Dedup {
     array(cols: _*)
   }
 
-  /** Candidate near-duplicate pairs via LSH banding: documents sharing
-    * any band bucket. Returns (id_a, id_b, n_shared_bands) with a < b.
-    * Scale shape: explode(bands) → groupBy bucket → pairs within bucket;
-    * skewed mega-buckets are capped by `maxBucket` (logged upstream).
-    */
-  def minhashCandidates(
-      docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, maxBucket: Int = 1000): DataFrame =
-    minhashCandidatesFromHashes(
-      docs.select(col(idCol).as("id"), shingleHashes(col(textCol)).as("hs")),
-      numHashes, bands, maxBucket)
-
-  /** [[minhashCandidates]] over a pre-staged `(id, hs)` frame — the hot
-    * path when the caller also needs the hash sets for exact
-    * verification: stage [[distinctShingleHashes]] ONCE (signatures are
+  /** Candidate near-duplicate pairs via LSH banding over a pre-staged
+    * `(id, hs)` frame: documents sharing any band bucket. Returns
+    * (id_a, id_b, n_shared_bands) with a < b. Scale shape:
+    * explode(bands) → groupBy bucket → pairs within bucket; skewed
+    * mega-buckets are capped by `maxBucket`. When the caller also needs
+    * the hash sets for exact verification, stage
+    * [[distinctShingleHashes]] ONCE (signatures are
     * identical on the distinct set — a per-hash min is
     * duplicate-insensitive) and feed it to both stages instead of
     * re-hashing the text.
@@ -360,11 +333,6 @@ object Dedup {
       .select("id_a", "id_b", "lev", "ed_ppm", "is_dup")
   }
 
-  /** Estimated Jaccard from two signatures (fraction of agreeing hashes). */
-  def signatureJaccard(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / size(sigA)
-
   // ---- SimHash -----------------------------------------------------------
 
   /** Number of SimHash bits: 63, so the value stays a positive BIGINT and
@@ -372,14 +340,10 @@ object Dedup {
     */
   val SimhashBits = 63
 
-  /** SimHash over token hashes: bit i of the result is 1 iff the
-    * sum over tokens of ±1 (per token-hash bit i) is positive.
-    */
-  def simhash(text: Column): Column =
-    simhashFromHashes(tokenHashes63(text))
-
-  /** SimHash from a pre-materialised token-hash array column. A native
-    * Catalyst expression (graft.functions.SimHash63): one codegen'd pass
+  /** SimHash from a pre-materialised token-hash array column: bit i of
+    * the result is 1 iff the sum over tokens of ±1 (per token-hash bit
+    * i) is positive. A native Catalyst expression
+    * (graft.functions.SimHash63): one codegen'd pass
     * with a primitive vote accumulator — the HOF form it replaces
     * ([[simhashFromHashesHof]]) is 63 interpreted `aggregate` folds.
     * Bit-identical on non-null input (DedupSpec); null token arrays
@@ -408,7 +372,7 @@ object Dedup {
     * `bands` 16-bit chunks (pigeonhole — any pair within Hamming distance
     * maxHam < bands shares at least one exact chunk), bucket equi-join per
     * band, then exact Hamming verify via bit_count(xor). The same
-    * explode→groupBy→pair-expand shape as [[minhashCandidates]]: no
+    * explode→groupBy→pair-expand shape as [[minhashCandidatesFromHashes]]: no
     * all-pairs join ever forms, oversized buckets are capped.
     * Returns (id_a, id_b, hamming) with a < b, hamming ≤ maxHam.
     */
@@ -435,7 +399,7 @@ object Dedup {
     * distance `maxHam` is the CALLER's contract: either bands > maxHam
     * (pigeonhole) or a construction that confines differing bits to
     * fewer than `bands` chunks. Same explode→groupBy→pair-expand shape
-    * as [[minhashCandidates]]: no all-pairs join, oversized buckets
+    * as [[minhashCandidatesFromHashes]]: no all-pairs join, oversized buckets
     * capped. Returns (id_a, id_b, hamming) with a < b, hamming ≤ maxHam.
     */
   def hammingPairs(
@@ -468,18 +432,16 @@ object Dedup {
       .filter(col("hamming") <= maxHam)
   }
 
-  /** Exact n-gram Jaccard between explicit shingle sets (for verification
-    * of LSH candidates): |A ∩ B| / |A ∪ B| over distinct shingle hashes.
-    */
-  def ngramJaccard(textA: Column, textB: Column, w: Int = 3): Column =
-    jaccardByHashSets(
-      distinctShingleHashes(textA, w), distinctShingleHashes(textB, w))
-
   /** Distinct shingle-hash set — stage ONCE per doc and reuse for both
     * LSH banding and exact verification. Re-hashing raw text per
     * candidate pair costs (|pairs|·2/|docs|)× the whole corpus's hash
     * work: measured 48 s of a 140 s 500k-doc pipeline before this
-    * staging existed (BENCH.md round 4).
+    * staging existed (BENCH.md round 4). A fused native expression
+    * (graft.functions.ShingleHashes): the HOF form
+    * ([[shingleHashesHof]]) is five nested interpreted higher-order
+    * functions allocating a shingle string per window; the native one
+    * tokenizes the UTF-8 bytes once and streams each window into the
+    * digest. Bit-identical (TextHashExprsSpec), oracles unchanged.
     */
   def distinctShingleHashes(text: Column, w: Int = 3): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
@@ -853,7 +815,6 @@ object Dedup {
   def annCosineTopK(
       embeddings: DataFrame, idCol: String, vecCol: String, k: Int,
       bits: Int = 8, maxBucket: Long = 100000L): DataFrame = {
-    val spark = embeddings.sparkSession
     val vecs = embeddings
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .withColumn("bucket", lshBucket(col("v"), bits))

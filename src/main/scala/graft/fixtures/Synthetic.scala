@@ -1,6 +1,6 @@
 package graft.fixtures
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Seeded procedural "planet" for the scale tiers (FIXTURES.md §5):
@@ -18,9 +18,6 @@ object Synthetic {
   val Buckets = 4096L
   val Slots = 1009L
   val InteriorBase = 1L << 36 // clear of endpoint ids, below 2^40
-
-  def endpointNid(bucket: Column, slot: Column): Column =
-    bucket * 100000L + slot + 1L
 
   /** ways(wid, nids, tags, ts) — `n` ways, ~n·(interiorPerWay+2) node
     * references, ~5 % pillar fraction at interiorPerWay≈18.

@@ -209,7 +209,9 @@ private[functions] trait TextToLongArrayExpr extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 }
 
-/** `Dedup.shingleHashes` / `distinctShingleHashes` as one fused pass. */
+/** `Dedup.distinctShingleHashes` as one fused pass; `distinct = false`
+  * keeps every window in order (the form `Dedup.shingleHashesHof`
+  * computes). */
 case class ShingleHashes(child: Expression, w: Int, distinct: Boolean)
     extends TextToLongArrayExpr {
   require(w >= 1, s"shingle width must be >= 1; got $w")

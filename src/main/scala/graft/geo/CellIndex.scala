@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object CellIndex {
 
-  val MaxRes = 28
-
   // ---- Scala side ----------------------------------------------------
 
   /** Spread the low 32 bits of v so bit i lands at bit 2i. */
@@ -74,13 +72,10 @@ object CellIndex {
   /** Cell height in degrees at `res`. */
   def cellDeg(res: Int): Double = 180.0 / (1L << res)
 
-  /** All cells with Chebyshev distance ≤ k (the (2k+1)² block), with
-    * longitude wrap-around and latitude clamping. Used by kNN ring search.
-    */
-  def disk(cellId: Long, k: Int): Seq[Long] = annulus(cellId, -1, k)
-
-  /** Cells with Chebyshev distance in (kLo, kHi] — the NEW ring band when
-    * a kNN search expands from radius kLo to kHi (kLo = -1 → full disk).
+  /** Cells with Chebyshev distance in (kLo, kHi], with longitude
+    * wrap-around and latitude clamping — the NEW ring band when a kNN
+    * search expands from radius kLo to kHi (kLo = -1 → the full
+    * (2kHi+1)² disk).
     * Already-searched inner cells are not regenerated, so each expansion
     * round touches only the annulus, not the whole (2kHi+1)² block.
     */

@@ -1,6 +1,6 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cell-indexed spatial joins (north rule: point-in-polygon containment,

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.geo.Geo
@@ -190,16 +190,7 @@ object DownOps {
       .toDF("scc", "length_m_raw", "areas", "feature")
   }
 
-  /** S8 — per-area loop stats: (area, loops_count, loops_length_m)
-    * (loops_csv_stats.rs:8-47). `loopAreas` = (scc, area) from a PIP join.
-    */
-  def loopStats(loops: DataFrame, loopAreas: DataFrame): DataFrame =
-    loops.join(loopAreas, Seq("scc"), "left")
-      .groupBy(coalesce(col("area"), lit("unknown_area")).as("area"))
-      .agg(count(lit(1)).as("loops_count"),
-        Geo.roundHalfAway(sum("length_m"), 1).as("loops_length_m"))
-
-  /** S10 — OpenMetrics rendering of [[loopStats]]
+  /** S10 — OpenMetrics rendering of the down CLI's per-area loop stats
     * (openmetrics.rs:8-44: `waterwaymap_loops_{count,length_m}{area=…} v ts`).
     */
   def openMetrics(stats: Seq[(String, Long, Double)], epochSec: Long): String = {
@@ -512,23 +503,6 @@ object DownOps {
   /** `stream_level_code_str` (tag_group.rs:55-60): code parts joined ".". */
   def streamLevelCodeStr(code: Seq[Int]): String = code.mkString(".")
 
-  /** D15 — confluence distances (tag_group.rs:716-806): within one group,
-    * Dijkstra flood DOWNSTREAM from each marked node (confluence / source
-    * / sink) → pairwise distance map.
-    */
-  def confluenceDistances(
-      edges: Seq[(Long, Long, Double)],
-      marked: Seq[Long]): Map[(Long, Long), Double] = {
-    val adj = edges.groupBy(_._1).view
-      .mapValues(_.map(e => (e._2, e._3)).sortBy(x => (x._2, x._1))).toMap
-    val out = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
-    for (m <- marked.distinct.sorted) {
-      val (dist, _) = Local.dijkstra(adj, m)
-      for (t <- marked if t != m; d <- dist.get(t)) out((m, t)) = d
-    }
-    out.toMap
-  }
-
   /** D10 — grouped-ends line assembly (down/main.rs:1427-1714): within
     * one end's basin, walk upstream from the end repeatedly taking the
     * unused in-edge with the largest upstream flow (:1579-1587); when the
@@ -767,25 +741,5 @@ object DownOps {
       case Nil => 0.0
       case ds  => ds.max
     }
-  }
-
-  /** D12 summary — per tag group: length, member/edge counts, sources,
-    * sinks (tag_group.rs:241-280).
-    */
-  def tagGroupSummary(tagGrouped: DataFrame, lens: DataFrame): DataFrame = {
-    val withLen = tagGrouped.join(lens, Seq("src", "dst"))
-    val srcs = tagGrouped.select(col("tag"), col("tag_group_nid"), col("src").as("nid"))
-    val dsts = tagGrouped.select(col("tag"), col("tag_group_nid"), col("dst").as("nid"))
-    val sources = srcs.except(dsts)
-      .groupBy("tag", "tag_group_nid").agg(count(lit(1)).as("n_sources"))
-    val sinks = dsts.except(srcs)
-      .groupBy("tag", "tag_group_nid").agg(count(lit(1)).as("n_sinks"))
-    withLen
-      .groupBy("tag", "tag_group_nid")
-      .agg(count(lit(1)).as("n_edges"),
-        Geo.roundHalfAway(sum("len"), 1).as("length_m"))
-      .join(sources, Seq("tag", "tag_group_nid"), "left")
-      .join(sinks, Seq("tag", "tag_group_nid"), "left")
-      .na.fill(0L, Seq("n_sources", "n_sinks"))
   }
 }

@@ -33,13 +33,6 @@ object Flow {
       .distinct()
       .join(edges.select(col("src").as("nid")).distinct(), Seq("nid"), "left_anti")
 
-  /** Source points: vertexes with no incoming edge. */
-  def sourcePoints(edges: DataFrame): DataFrame =
-    edges
-      .select(col("src").as("nid"))
-      .distinct()
-      .join(edges.select(col("dst").as("nid")).distinct(), Seq("nid"), "left_anti")
-
   final case class UpstreamResult(
       nodeUpstream: DataFrame, // (nid, upstream_m)
       edgeFlow: DataFrame,     // (src, dst, tag, len, flow_m)
@@ -163,12 +156,6 @@ object Flow {
         bigRes.rounds)
     }
   }
-
-  /** Equal-split upstream accumulation (no tag grouping). */
-  def upstreamEqualSplit(
-      edges: DataFrame,
-      checkpointer: Option[(Int, DataFrame) => DataFrame] = None): UpstreamResult =
-    upstreamFlow(edges.withColumn("tag", lit(null).cast("string")), checkpointer)
 
   /** D5 — upstream accumulation over a DAG with the full splitting rule:
     * a [[Frontier]] countdown on in-degree, pushing along `src → dst`.

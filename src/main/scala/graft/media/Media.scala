@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column operators (builder brief): image/audio/video travel
-  * as opaque `binary` columns with TYPED metadata; decode/feature-extract/
-  * resize/frame-sample run as per-partition BATCHED functions — the Scala
+  * as opaque `binary` columns with TYPED metadata; decode and feature
+  * extraction run as per-partition BATCHED functions — the Scala
   * analog of PySpark's `mapInPandas` Pandas-UDF batches is
   * `mapPartitions` over a columnar-friendly row schema (Tungsten rows in,
   * one iterator per partition, no per-row lambda dispatch).
@@ -74,17 +74,10 @@ object Media {
 
   /** The media codec — where a compressed-format library (libjpeg,
     * libsndfile, ffmpeg) would otherwise plug in. PPM (P6) is decoded
-    * and encoded FOR REAL (it is raw RGB behind a tiny ASCII header);
+    * FOR REAL (it is raw RGB behind a tiny ASCII header);
     * audio/video payloads decode as headerless raw 8-bit samples.
     */
   object Codec {
-
-    /** Encode a real binary PPM (P6): `P6\nW H\n255\n` + raster. */
-    def encodePpm(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
-      require(w > 0 && h > 0 && rgb.length == w * h * 3,
-        s"encodePpm: raster ${rgb.length} != $w*$h*3")
-      s"P6\n$w $h\n255\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ rgb
-    }
 
     /** Full PPM (P6) parse: magic, header tokens separated by arbitrary
       * whitespace and `#`-to-EOL comments (the netpbm spec), maxval
@@ -181,64 +174,6 @@ object Media {
       }
       .toDF("doc_id", "kind", "hist", "mean_c")
   }
-
-  /** Resize (images): REAL decode → 2-D RGB nearest-neighbour resample
-    * → re-encode, batched per partition like [[extractFeatures]] —
-    * out(y, x) = in(y·h/newH, x·w/newW), all three channels carried.
-    * Output keeps the binary column contract: (doc_id, bytes', meta')
-    * with bytes' a valid PPM of the new dimensions.
-    */
-  def resize(media: DataFrame, newW: Int, newH: Int): DataFrame = {
-    require(newW > 0 && newH > 0)
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(col("kind") === "image")
-      .select(col("doc_id"), col("bytes"),
-        col("meta.sample_rate").as("sample_rate"),
-        col("meta.n_frames").as("n_frames"))
-      .as[(Long, Array[Byte], Int, Int)]
-      .mapPartitions { batch =>
-        val out = new Array[Byte](newW * newH * 3) // reused across the batch
-        batch.map { case (id, bytes, sr, nf) =>
-          val (w, h, px) = Codec.decodePpm(bytes)
-          var y = 0
-          while (y < newH) {
-            val sy = y * h / newH
-            var x = 0
-            while (x < newW) {
-              val si = (sy * w + x * w / newW) * 3
-              val di = (y * newW + x) * 3
-              out(di) = px(si).toByte
-              out(di + 1) = px(si + 1).toByte
-              out(di + 2) = px(si + 2).toByte
-              x += 1
-            }
-            y += 1
-          }
-          (id, Codec.encodePpm(newW, newH, out), sr, nf)
-        }
-      }
-      .toDF("doc_id", "bytes", "sample_rate", "n_frames")
-      .select(col("doc_id"), col("bytes"),
-        struct(lit(newW).as("width"), lit(newH).as("height"),
-          col("sample_rate"), col("n_frames")).as("meta"))
-  }
-
-  /** Frame sampling (video): slice the payload into meta.n_frames equal
-    * frames and keep every `every`-th — array<binary> via substring
-    * arithmetic, fully columnar.
-    */
-  def frameSample(media: DataFrame, every: Int): DataFrame =
-    media.filter(col("kind") === "video").select(
-      col("doc_id"),
-      expr(
-        s"""filter(
-           |  transform(sequence(0, meta.n_frames - 1), i ->
-           |    CASE WHEN i % $every = 0 THEN substring(bytes,
-           |      i * CAST(length(bytes) / meta.n_frames AS INT) + 1,
-           |      CAST(length(bytes) / meta.n_frames AS INT)) END),
-           |  f -> f IS NOT NULL)""".stripMargin.replace("\n", " "))
-        .as("frames"))
 
   /** Near-dup media synthesis: groups of `groupSize` consecutive doc_ids
     * share the first 3 payload blocks (the "image content"); the 4th

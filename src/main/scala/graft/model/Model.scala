@@ -1,45 +1,7 @@
 package graft.model
 
-import java.sql.Timestamp
-
-/** Core typed rows of the engine (SURVEY.md §1.2).
-  *
-  * Mirrors the logical content of the reference's in-memory stores
-  * (/root/reference/src/nodeid_position.rs, graph/undirected_graph.rs,
-  * graph/directed_graph.rs) as Spark Datasets.
-  */
-final case class Node(nid: Long, lat: Double, lon: Double)
-
-final case class Way(
-    wid: Long,
-    nids: Seq[Long],
-    tags: Map[String, String],
-    ts: Timestamp)
-
 /** A contracted undirected segment: pillar-to-pillar with the contracted-away
   * interior node ids carried inline (replaces the reference's InterStore,
   * /root/reference/src/inter_store.rs:7-8).
   */
 final case class Edge(src: Long, dst: Long, inter: Seq[Long], wid: Long)
-
-/** Directed flow edge with per-edge properties
-  * (/root/reference/src/bin/osm-lump-ways-down/main.rs:110-134).
-  */
-final case class DirEdge(
-    src: Long,
-    dst: Long,
-    inter: Seq[Long],
-    wid: Long,
-    lengthM: Double,
-    tagValue: String)
-
-/** Connected-component label row. */
-final case class CompLabel(nid: Long, comp: Long)
-
-/** Graft web page row (BASELINE.json input_hint). */
-final case class Page(
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)

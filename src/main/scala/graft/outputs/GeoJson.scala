@@ -2,12 +2,11 @@ package graft.outputs
 
 import java.util.Locale
 
-/** GeoJSON / GeoJSONSeq / WKT formatters (SURVEY.md §2.1 S6/S7).
+/** GeoJSON / GeoJSONSeq formatters (SURVEY.md §2.1 S6).
   *
   * Byte-parity targets from the reference
   * (/root/reference/src/fileio.rs:116-213):
   *   - coordinates fixed 6 decimal places (fileio.rs:185,196,209)
-  *   - WKT points 8 decimal places (fileio.rs:56,80-88)
   *   - GeoJSONSeq framing: RS (0x1E) prefix, LF (0x0A) suffix per feature
   *     (fileio.rs:156-168)
   *   - `.geojson` FeatureCollection wrapper (fileio.rs:127-142)
@@ -27,9 +26,6 @@ object GeoJson {
         .map(l => s"[${l.map { case (lon, lat) => fmtCoord(lon, lat) }.mkString(",")}]")
         .mkString(",")}],"type":"MultiLineString"}"""
 
-  def point(lon: Double, lat: Double): String =
-    s"""{"coordinates":${fmtCoord(lon, lat)},"type":"Point"}"""
-
   /** A feature with pre-serialized properties JSON and geometry JSON. */
   def feature(propertiesJson: String, geometryJson: String): String =
     s"""{"properties":$propertiesJson,"geometry":$geometryJson,"type":"Feature"}"""
@@ -42,18 +38,6 @@ object GeoJson {
     Iterator("""{"type":"FeatureCollection", "features": [""") ++
       features.zipWithIndex.map { case (f, i) => if (i == 0) f else ",\n" + f } ++
       Iterator("]}")
-
-  /** WKT POINT with 8 decimals (fileio.rs:56,80-88). */
-  def wktPoint(lon: Double, lat: Double): String =
-    String.format(Locale.ROOT, "POINT(%.8f %.8f)", Double.box(lon), Double.box(lat))
-
-  /** WKT LINESTRING with 8 decimals. */
-  def wktLineString(coords: Seq[(Double, Double)]): String =
-    coords
-      .map { case (lon, lat) =>
-        String.format(Locale.ROOT, "%.8f %.8f", Double.box(lon), Double.box(lat))
-      }
-      .mkString("LINESTRING(", ", ", ")")
 
   /** JSON number rendering matching Rust serde_json's f64 output: plain
     * decimal (never scientific), integral floats keep a trailing `.0`.

@@ -42,17 +42,6 @@ object Writers {
       path, overwrite)
   }
 
-  /** CSV with explicit header/ordering (the reference's writer,
-    * fileio.rs:216-264 — `df.write.csv` quoting is not byte-compatible).
-    */
-  def writeCsv(
-      header: Seq[String], rows: Iterator[Seq[String]],
-      path: String, overwrite: Boolean): Unit =
-    writeLines(
-      Iterator(header.mkString("", ",", "\n")) ++
-        rows.map(_.map(csvEsc).mkString("", ",", "\n")),
-      path, overwrite)
-
   private def csvEsc(s: String): String =
     if (s.contains(',') || s.contains('"') || s.contains('\n'))
       "\"" + s.replace("\"", "\"\"") + "\""

@@ -236,7 +236,7 @@ object Extras {
         .join(nodes.select(col("nid").as("b")), Seq("b"), "left_semi")
         .select(col("comp"), col("a").as("src"), col("b").as("dst")),
       nodes, spark, maxSamples, minValue, minFraction,
-      bigGroupsOpt = Some(split.bigKeys)))
+      split.bigKeys))
   }
 
   /** Steps 2-5 of the reference betweenness pipeline over an already
@@ -302,7 +302,7 @@ object Extras {
   private def betweennessAtScale(
       big: DataFrame, nodes: DataFrame, spark: SparkSession,
       maxSamples: Int, minValue: Double, minFraction: Double,
-      bigGroupsOpt: Option[DataFrame] = None): DataFrame = {
+      bigGroups: DataFrame): DataFrame = {
     import spark.implicits._
     // `big` arrives canonical+distinct from the caller's shared frame;
     // no pillars are pinned (Catalyst drops the anti-join against the
@@ -312,7 +312,7 @@ object Extras {
       graft.graph.DistContract.contract(
         big, Seq.empty[(Long, Long)].toDF("comp", "nid"), spark,
         "P8 betweenness contraction",
-        assumeCanonical = true, compsOpt = bigGroupsOpt), spark)
+        assumeCanonical = true, compsOpt = Some(bigGroups)), spark)
     chainWeighted(contracted, nodes)
       .as[(Long, Long, Long, Seq[Long], Double,
         Double, Double, Double, Double)]
@@ -502,7 +502,6 @@ object Extras {
       .groupByKey(_._1)
       .flatMapGroups { (_, rows) =>
         val es = Local.boundedSeq(rows, "D17 longest source-mouth")
-        val outs = es.map(e => (e._2, e._3)).toSet
         // set membership, not es.exists — the linear scan per node is
         // O(V·E) on big components (and O(mouths·V·E) for the candidate
         // filter below)

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.graph.{ConnectedComponents, DistContract, GraphBuild, Local}
 import graft.geo.Geo
 import graft.outputs.GeoJson
@@ -73,15 +72,6 @@ object LumpWays {
       // decomposition is within the reference's contract either way (its
       // into_lines_random walk is unseeded-RNG).
       shardThresholdEdges: Long = 2000000L)
-
-  final case class Feature(
-      comp: Long,
-      tagGroups: Seq[String],
-      lengthM: Double,
-      numNodes: Long,
-      rootNodeid: Long,
-      lines: Seq[Seq[Long]], // peeled walks, pillar nids
-      coords: Seq[Seq[(Double, Double)]]) // (lon, lat) per line
 
   /** The threshold-independent prefix of [[features]] (steps 1-7): every
     * frame here is a pure function of (ways, nodes, tag filters, group
@@ -443,12 +433,6 @@ object LumpWays {
       else GeoJson.multiLineString(coords)
     GeoJson.feature(GeoJson.propsJson(groupPropsKvs(r) ++ distKvs), geom)
   }
-
-  /** Collected GeoJSONSeq strings (test/fixture convenience; the CLI
-    * streams [[featureJson]] instead).
-    */
-  def toGeoJsonSeq(features: DataFrame): Seq[String] =
-    featureJson(features).collect().map(r => GeoJson.seqFrame(r.getString(0))).toSeq
 
   /** P6 CLI output — `--output-frames` (main.rs:871-975): per kept way
     * group (length ≥ `--frames-group-min-length-m`), the frame lines as

@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.{DownOps, Flow, Scc}
-import graft.geo.{Geo, SpatialJoins}
+import graft.graph.{DownOps, Flow}
+import graft.geo.SpatialJoins
 import Derived._
 
 /** Directed-flow operator suite (SURVEY §2.6 D2/D3/D9/D11/D12 + sink

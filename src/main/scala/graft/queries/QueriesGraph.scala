@@ -2,8 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.graph.{ConnectedComponents, Flow, GraphBuild, Scc}
+import graft.graph.{ConnectedComponents, Flow, GraphBuild}
 import graft.geo.Geo
 import Derived._
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.{DownOps, Flow, RiverRel}
+import graft.graph.{DownOps, RiverRel}
 import Derived._
 
 /** D10/D13/D16 query entries over the derived graph. */

@@ -52,10 +52,6 @@ object TagFilterCompiler {
     }
   }
 
-  /** Compile a filter-string directly. */
-  def compileStr(s: String, tags: Column): Column =
-    compile(TagFilter.unsafeParse(s), tags)
-
   /** First-match-decides chain → `when(...).when(...).otherwise(...)`
     * (exact first-match semantics of tagfilter.rs:343-350). A chain whose
     * rules all fail yields NULL, matching the reference's `expect` panic

@@ -78,19 +78,6 @@ object SuffixArray {
     Ranks.withGlobalRowNumber(windows(docs, idCol, textCol, cap).localCheckpoint(true),
       Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
 
-  /** The rank side alone from a (checkpointed) [[windows]] frame:
-    * (doc_id, pos, sa_rank). */
-  def rankWindows(wins: DataFrame): DataFrame =
-    Ranks.withGlobalRowNumber(wins,
-        Seq(col("win").asc, col("doc_id").asc, col("pos").asc), "sa_rank")
-      .select("doc_id", "pos", "sa_rank")
-
-  /** The suffix array: (doc_id, pos, sa_rank). */
-  def suffixRanks(
-      docs: DataFrame, idCol: String, textCol: String,
-      cap: Int = 128): DataFrame =
-    rankWindows(windows(docs, idCol, textCol, cap).localCheckpoint(true))
-
   /** The suffix array WITH adjacency inline:
     * (doc_id, pos, win, sa_rank, doc_a, pos_a, lcp) where (doc_a, pos_a)
     * is the suffix at sa_rank−1 and lcp its exact common prefix with

@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import java.nio.file.{Files, Paths}
 

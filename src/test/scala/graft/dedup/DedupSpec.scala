@@ -1,9 +1,11 @@
 package graft.dedup
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.text.TextOps
+import TextHashExprsSpec.shingleHashes
 
 /** Pins the semantics of the oracle-less dedup operators (MinHash-LSH,
   * SimHash) plus the text primitives.
@@ -18,6 +20,15 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   private def docs = Seq(
     (1L, base), (2L, base), (3L, nearDup), (4L, other))
     .toDF("doc_id", "text")
+
+  /** (id, hs): every shingle hash of each doc's text. */
+  private def textHashes(d: DataFrame): DataFrame =
+    d.select(col("doc_id").as("id"), shingleHashes(col("text")).as("hs"))
+
+  /** Exact n-gram Jaccard |A ∩ B| / |A ∪ B| over distinct shingle hashes. */
+  private def ngramJaccard(a: Column, b: Column): Column =
+    Dedup.jaccardByHashSets(
+      Dedup.distinctShingleHashes(a), Dedup.distinctShingleHashes(b))
 
   test("exact dedup keeps min id per identical text") {
     val r = Dedup.exact(docs, "doc_id", "text")
@@ -137,7 +148,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("identical texts have identical minhash signatures") {
     val sigs = docs
-      .select(col("doc_id"), Dedup.shingleHashes(col("text")).as("hs"))
+      .select(col("doc_id"), shingleHashes(col("text")).as("hs"))
       .select(col("doc_id"), Dedup.minhashSignatureFromHashes(col("hs")).as("sig"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
     assert(sigs(1L) == sigs(2L))
@@ -149,21 +160,21 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("signature jaccard estimates: 1 for identical docs, low for unrelated") {
-    val est = docs
-      .select(col("doc_id"), Dedup.minhashSignature(col("text")).as("sig"))
-      .as("l").crossJoin(docs.select(col("doc_id"),
-        Dedup.minhashSignature(col("text")).as("sig")).as("r"))
-      .filter(col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id"), col("r.doc_id"),
-        Dedup.signatureJaccard(col("l.sig"), col("r.sig")).as("j"))
-      .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getDouble(2))).toMap
+    val sigs = docs
+      .select(col("doc_id"),
+        Dedup.minhashSignatureFromHashes(shingleHashes(col("text"))).as("sig"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
+    // the estimate: the fraction of agreeing hashes
+    val est = (for ((a, sa) <- sigs; (b, sb) <- sigs if a < b)
+      yield (a, b) -> sa.zip(sb).count { case (x, y) => x == y }.toDouble / sa.size)
+      .toMap
     assert(est((1L, 2L)) == 1.0) // identical docs agree on every hash
     assert(est((1L, 3L)) > 0.3) // near-dup estimate well above unrelated
     assert(est((1L, 4L)) < 0.1)
   }
 
   test("LSH candidates surface exact and near duplicates, not unrelated docs") {
-    val cands = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val cands = Dedup.minhashCandidatesFromHashes(textHashes(docs))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(cands.contains((1L, 2L)))
     assert(cands((1L, 2L)) == 16L) // identical docs share every band
@@ -173,7 +184,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("simhash: identical equal; near-dup within small hamming distance") {
     val hs = docs
-      .select(col("doc_id"), Dedup.simhash(col("text")).as("sh"))
+      .select(col("doc_id"), Dedup.simhashFromHashes(Dedup.tokenHashes63(col("text"))).as("sh"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(hs(1L) == hs(2L))
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -184,9 +195,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   test("ngram jaccard: identity 1, disjoint 0, near-dup in between") {
     val df = Seq((base, base, nearDup, other)).toDF("a", "b", "c", "d")
     val r = df.select(
-      Dedup.ngramJaccard(col("a"), col("b")).as("same"),
-      Dedup.ngramJaccard(col("a"), col("c")).as("near"),
-      Dedup.ngramJaccard(col("a"), col("d")).as("far")).head()
+      ngramJaccard(col("a"), col("b")).as("same"),
+      ngramJaccard(col("a"), col("c")).as("near"),
+      ngramJaccard(col("a"), col("d")).as("far")).head()
     assert(r.getDouble(0) == 1.0)
     assert(r.getDouble(1) > 0.2 && r.getDouble(1) < 1.0)
     assert(r.getDouble(2) == 0.0)
@@ -361,7 +372,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // real testdata texts; brute-force all-pairs Hamming as the oracle
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val sh = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("sh"))
+    val sh = docs.select(col("doc_id"), Dedup.simhashFromHashes(Dedup.tokenHashes63(col("text"))).as("sh"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expected = (for {
       (a, sa) <- sh; (b, sb) <- sh if a < b
@@ -387,14 +398,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .join(sets.select(col("doc_id").as("ida"), col("hs").as("ha")), col("a.doc_id") === col("ida"))
       .join(sets.select(col("doc_id").as("idb"), col("hs").as("hb")), col("b.doc_id") === col("idb"))
       .select(
-        Dedup.ngramJaccard(col("a.text"), col("b.text")).as("jt"),
+        ngramJaccard(col("a.text"), col("b.text")).as("jt"),
         Dedup.jaccardByHashSets(col("ha"), col("hb")).as("jh"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
     // candidates over the distinct set equal candidates from text
     // (per-hash min is duplicate-insensitive)
-    val fromText = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val fromText = Dedup.minhashCandidatesFromHashes(textHashes(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val fromSets = Dedup.minhashCandidatesFromHashes(
       sets.withColumnRenamed("doc_id", "id"))
@@ -410,7 +421,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val sets = docs.select(col("doc_id"),
       Dedup.distinctShingleHashes(col("text")).as("hs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
-    val cand = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val cand = Dedup.minhashCandidatesFromHashes(textHashes(docs))
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val expected = cand.map { case (a, b) =>
@@ -466,7 +477,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val ca = inter * 1000000L / sets(1L).size
     val cb = inter * 1000000L / sets(2L).size
     assert(ca == 1000000L && cb < 1000000L)
-    val jac = df.agg(Dedup.ngramJaccard(
+    val jac = df.agg(ngramJaccard(
       first(when(col("doc_id") === 1L, col("text")), ignoreNulls = true),
       first(when(col("doc_id") === 2L, col("text")), ignoreNulls = true))
       .as("j")).head().getDouble(0)

@@ -1,9 +1,11 @@
 package graft.dedup
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.text.TextOps
+import TextHashExprsSpec.shingleHashes
 
 /** The fused ShingleHashes / TokenHashes63 expressions must be bit-equal
   * to the HOF formulations the DuckDB oracles replay — including the
@@ -30,7 +32,7 @@ class TextHashExprsSpec extends AnyFunSuite with SparkTestBase {
 
   test("ShingleHashes(distinct=false) ≡ transform(shingles, md5h32)") {
     df.select(col("id"),
-        Dedup.shingleHashes(col("text")).as("native"),
+        shingleHashes(col("text")).as("native"),
         Dedup.shingleHashesHof(col("text")).as("hof"))
       .collect()
       .foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2),
@@ -61,7 +63,7 @@ class TextHashExprsSpec extends AnyFunSuite with SparkTestBase {
   test("different shingle widths stay equivalent") {
     Seq(1, 2, 5).foreach { w =>
       df.select(
-          Dedup.shingleHashes(col("text"), w).as("native"),
+          shingleHashes(col("text"), w).as("native"),
           Dedup.shingleHashesHof(col("text"), w).as("hof"))
         .collect()
         .foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1),
@@ -86,7 +88,7 @@ class TextHashExprsSpec extends AnyFunSuite with SparkTestBase {
   test("WinnowFingerprints ≡ pure-Scala reference on adversarial texts") {
     val (w, win) = (3, 4)
     df.select(col("id"),
-        Dedup.shingleHashes(col("text"), w).as("hs"),
+        shingleHashes(col("text"), w).as("hs"),
         Dedup.winnowFingerprints(col("text"), w, win).as("enc"))
       .collect()
       .foreach { r =>
@@ -116,4 +118,13 @@ class TextHashExprsSpec extends AnyFunSuite with SparkTestBase {
       .toMap
     assert(fps(1L).intersect(fps(2L)).nonEmpty)
   }
+}
+
+object TextHashExprsSpec {
+  /** Every shingle hash of `text`, duplicates kept and in order: the
+    * non-distinct form of the native pass that `Dedup.shingleHashesHof`
+    * formulates with higher-order functions. */
+  def shingleHashes(text: Column, w: Int = 3): Column =
+    GraftColumnBridge.column(graft.functions.ShingleHashes(
+      GraftColumnBridge.expression(text), w, distinct = false))
 }

@@ -13,6 +13,9 @@ class GeoSpec extends AnyFunSuite with SparkTestBase {
     (0 until n).foreach(_ => body(rng))
   }
 
+  /** All cells with Chebyshev distance ≤ k: the (2k+1)² block. */
+  private def disk(cellId: Long, k: Int): Seq[Long] = CellIndex.annulus(cellId, -1, k)
+
   import spark.implicits._
 
   test("haversine: 1 degree of longitude at the equator") {
@@ -85,11 +88,11 @@ class GeoSpec extends AnyFunSuite with SparkTestBase {
 
   test("disk: interior 3x3; wraps longitude; clamps latitude") {
     val c = CellIndex.cell(10.0, 10.0, 4)
-    assert(CellIndex.disk(c, 1).size == 9)
+    assert(disk(c, 1).size == 9)
     val nearPole = CellIndex.cell(89.9, 0.0, 4)
-    assert(CellIndex.disk(nearPole, 1).size == 6) // top row clamped
+    assert(disk(nearPole, 1).size == 6) // top row clamped
     val nearAntimeridian = CellIndex.cell(0.0, 179.99, 4)
-    val d = CellIndex.disk(nearAntimeridian, 1)
+    val d = disk(nearAntimeridian, 1)
     assert(d.size == 9) // wrapped, all distinct
   }
 
@@ -122,9 +125,9 @@ class GeoSpec extends AnyFunSuite with SparkTestBase {
       val res = 4 + rng.nextInt(6)
       val c = CellIndex.cell(rng.nextDouble * 170 - 85, rng.nextDouble * 360 - 180, res)
       val k = 1 + rng.nextInt(5)
-      val inner = CellIndex.disk(c, k - 1).toSet
+      val inner = disk(c, k - 1).toSet
       val ring = CellIndex.annulus(c, k - 1, k).toSet
-      assert((inner union ring) == CellIndex.disk(c, k).toSet)
+      assert((inner union ring) == disk(c, k).toSet)
     }
   }
 
@@ -156,11 +159,11 @@ class GeoSpec extends AnyFunSuite with SparkTestBase {
     assert(GeoJson.fmtCoord(2.3522, 48.8566) == "[2.352200, 48.856600]")
     assert(GeoJson.lineString(Seq((1.0, 2.0), (3.0, 4.0))) ==
       """{"coordinates":[[1.000000, 2.000000],[3.000000, 4.000000]],"type":"LineString"}""")
-    assert(GeoJson.feature("""{"a":1}""", GeoJson.point(1.0, 2.0)) ==
+    assert(GeoJson.feature("""{"a":1}""",
+        """{"coordinates":[1.000000, 2.000000],"type":"Point"}""") ==
       """{"properties":{"a":1},"geometry":{"coordinates":[1.000000, 2.000000],"type":"Point"},"type":"Feature"}""")
     val framed = GeoJson.seqFrame("{}")
     assert(framed.head == '\u001e' && framed.last == '\n')
-    assert(GeoJson.wktPoint(1.5, -2.25) == "POINT(1.50000000 -2.25000000)")
     assert(GeoJson.jsonStr("a\"b\nc") == "\"a\\\"b\\nc\"")
   }
 

@@ -1,7 +1,6 @@
 package graft.geo
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** Raster↔vector tiling: bin placement, midpoint binning, threshold,

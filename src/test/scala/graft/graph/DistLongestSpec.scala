@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** Distributed D17: the topo-DP + binary-lifting path must equal the

@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.geo.Geo
 
@@ -53,12 +52,6 @@ class DownOpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("S8/S10 loop stats + OpenMetrics text") {
-    val e = Seq((1L, 2L), (2L, 1L), (4L, 5L), (5L, 4L)).toDF("src", "dst")
-    val loops = DownOps.loops(e, nodes)
-    val areas = Seq((1L, "alpha")).toDF("scc", "area") // second loop unmatched
-    val stats = DownOps.loopStats(loops, areas)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    assert(stats.map(_._1).toSet == Set("alpha", "unknown_area"))
     val om = DownOps.openMetrics(
       Seq(("alpha", 1L, 222.4), ("beta", 2L, 10.0)), 1700000000L)
     assert(om.contains("# TYPE waterwaymap_loops_count gauge"))
@@ -102,18 +95,6 @@ class DownOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(g((10L, 11L)) == ("A", 10L))
   }
 
-  test("D12 summary: lengths, sources, sinks per tag group") {
-    val e = Seq((1L, 2L, "A"), (2L, 3L, "A")).toDF("src", "dst", "tag")
-    val lens = Seq((1L, 2L, 10.0), (2L, 3L, 20.0)).toDF("src", "dst", "len")
-    val s = DownOps.tagGroupSummary(DownOps.tagGroupCC(e), lens).head()
-    assert(s.getAs[String]("tag") == "A")
-    assert(s.getAs[Long]("tag_group_nid") == 1L)
-    assert(s.getAs[Long]("n_edges") == 2L)
-    assert(s.getAs[Double]("length_m") == 30.0)
-    assert(s.getAs[Long]("n_sources") == 1L)
-    assert(s.getAs[Long]("n_sinks") == 1L)
-  }
-
   test("C10 spike removal: degree-1 chains peel off, keep-set pins") {
     val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (3L, 1L), (4L, 5L))
     // 5 is a spike; then 4 becomes degree-1 → removed; triangle 1-2-3 stays
@@ -133,14 +114,6 @@ class DownOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(lv(2L) == (1, Seq(1, 2)))
     assert(lv(4L) == (2, Seq(1, 2, 1)))
     assert(DownOps.streamLevelCodeStr(Seq(1, 2, 1)) == "1.2.1")
-  }
-
-  test("D15 confluence distances: pairwise downstream Dijkstra") {
-    val es = Seq((1L, 2L, 10.0), (2L, 3L, 5.0), (2L, 4L, 7.0))
-    val d = DownOps.confluenceDistances(es, Seq(1L, 3L, 4L))
-    assert(d((1L, 3L)) == 15.0)
-    assert(d((1L, 4L)) == 17.0)
-    assert(!d.contains((3L, 1L))) // downstream only
   }
 
   test("D10 grouped-ends: main stem follows max flow, side lines peel") {

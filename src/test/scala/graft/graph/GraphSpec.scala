@@ -24,6 +24,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       GraphBuild.contractedEdges(waysDF(ws: _*), spark))
       .collect().map(e => (e.src, e.dst, e.inter, e.wid)).toSet
 
+  /** No tag on any edge: [[Flow.upstreamFlow]] splits equally. */
+  private def untagged(e: org.apache.spark.sql.DataFrame) =
+    e.withColumn("tag", lit(null).cast("string"))
+
   test("fx-chain: census weights match reference formula (first 1, interior 2, last 3)") {
     assert(census(1L -> Seq(1L, 2L, 3L, 4L, 5L)) ==
       Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 2L, 5L -> 3L))
@@ -126,7 +130,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
   test("fx-confluence: two streams joining (D5 upstream sums)") {
     val e = Seq((1L, 3L, 10.0), (2L, 3L, 20.0), (3L, 4L, 5.0))
       .toDF("src", "dst", "len")
-    val up = Flow.upstreamEqualSplit(e).nodeUpstream
+    val up = Flow.upstreamFlow(untagged(e)).nodeUpstream
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(up == Map(1L -> 0.0, 2L -> 0.0, 3L -> 30.0, 4L -> 35.0))
   }
@@ -134,21 +138,20 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
   test("fx-bifurcation: equal flow split over out-edges") {
     val e = Seq((1L, 2L, 10.0), (2L, 3L, 5.0), (2L, 4L, 7.0))
       .toDF("src", "dst", "len")
-    val r = Flow.upstreamEqualSplit(e)
+    val r = Flow.upstreamFlow(untagged(e))
     val up = r.nodeUpstream.collect().map(x => (x.getLong(0), x.getDouble(1))).toMap
     assert(up == Map(1L -> 0.0, 2L -> 10.0, 3L -> 10.0, 4L -> 12.0))
     assert(r.rounds == 3) // DAG depth — parallelism-invariant metric
   }
 
-  test("Flow.upstreamEqualSplit rejects cycles") {
+  test("Flow.upstreamFlow rejects cycles") {
     val e = Seq((1L, 2L, 1.0), (2L, 1L, 1.0)).toDF("src", "dst", "len")
-    intercept[IllegalStateException] { Flow.upstreamEqualSplit(e) }
+    intercept[IllegalStateException] { Flow.upstreamFlow(untagged(e)) }
   }
 
   test("fx-delta ends: D7 end points") {
     val e = Seq((1L, 2L), (2L, 3L), (2L, 4L)).toDF("src", "dst")
     assert(Flow.endPoints(e).collect().map(_.getLong(0)).toSet == Set(3L, 4L))
-    assert(Flow.sourcePoints(e).collect().map(_.getLong(0)).toSet == Set(1L))
   }
 
   test("fx-loop-directed: SCC finds the 3-cycle, drops singletons (kosaraju.rs:87)") {

@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.geo.Geo
 
 class LocalPathsSpec extends AnyFunSuite {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** Multimodal plumbing: binary columns, typed metadata, the REAL PPM
-  * codec, batched decode, resize and frame sampling.
+  * codec and batched decode.
   */
 class MediaSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -15,6 +15,10 @@ class MediaSpec extends AnyFunSuite with SparkTestBase {
 
   private def md5Bytes(s: String): Array[Byte] =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+
+  /** A binary PPM (P6): `P6\nW H\n255\n` + raster. */
+  private def encodePpm(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] =
+    s"P6\n$w $h\n255\n".getBytes("US-ASCII") ++ rgb
 
   test("synthesize: schema, kinds, audio raw payload, image is real PPM") {
     val m = Media.synthesize(docs)
@@ -47,7 +51,7 @@ class MediaSpec extends AnyFunSuite with SparkTestBase {
     val (w, h, px) = Media.Codec.decodePpm(loose)
     assert((w, h) == ((2, 1)) && px.toSeq == raster.map(_ & 0xff).toSeq)
     // round trip through the encoder
-    val enc = Media.Codec.encodePpm(2, 1, raster)
+    val enc = encodePpm(2, 1, raster)
     assert(Media.Codec.decodePpm(enc)._3.toSeq == raster.map(_ & 0xff).toSeq)
     def bad(bs: Array[Byte]) =
       intercept[IllegalArgumentException](Media.Codec.decodePpm(bs))
@@ -76,38 +80,6 @@ class MediaSpec extends AnyFunSuite with SparkTestBase {
     // is narrow — no shuffle inserted)
     val plan = Media.extractFeatures(m).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"decode batch should be narrow:\n$plan")
-  }
-
-  test("resize: real decode → RGB nearest-neighbour → valid PPM out") {
-    val m = Media.synthesize(docs)
-    val r = Media.resize(m, 2, 2)
-    val row = r.filter(col("doc_id") === 0L).head()
-    val out = row.getAs[Array[Byte]]("bytes")
-    assert(row.getAs[org.apache.spark.sql.Row]("meta").getAs[Int]("width") == 2)
-    // doc 0: 1×1 source → all four output pixels = the single source RGB
-    val (w, h, px) = Media.Codec.decodePpm(out)
-    assert((w, h) == ((2, 2)))
-    val srcRgb = md5Bytes("0#0").take(3).map(_ & 0xff).toSeq
-    assert(px.grouped(3).map(_.toSeq).toSeq == Seq.fill(4)(srcRgb))
-    // doc 6: 7×1 source → output pixel x reads source pixel x*7/2
-    val out6 = Media.resize(m, 2, 1).filter(col("doc_id") === 6L)
-      .head().getAs[Array[Byte]]("bytes")
-    val px6 = Media.Codec.decodePpm(out6)._3
-    val src6 = (md5Bytes("6#0") ++ md5Bytes("6#1")).take(21).map(_ & 0xff)
-    assert(px6.toSeq ==
-      (src6.slice(0, 3) ++ src6.slice(3 * 3, 3 * 3 + 3)).toSeq)
-  }
-
-  test("frameSample: every k-th equal slice of the payload") {
-    val m = Media.synthesize(docs)
-    // doc 2: video, n_frames = 2 % 5 + 1 = 3 → frames of 21 bytes, every 2nd
-    val frames = Media.frameSample(m, 2)
-      .filter(col("doc_id") === 2L)
-      .head().getSeq[Array[Byte]](1)
-    val src = m.filter(col("doc_id") === 2L).select("bytes").head().getAs[Array[Byte]](0)
-    assert(frames.length == 2) // frames 0 and 2
-    assert(frames(0).toSeq == src.slice(0, 21).toSeq)
-    assert(frames(1).toSeq == src.slice(42, 63).toSeq)
   }
 
   test("phashPairs: every in-group pair found, hamming confined to personal bits") {

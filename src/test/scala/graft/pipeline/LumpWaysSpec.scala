@@ -29,6 +29,11 @@ class LumpWaysSpec extends AnyFunSuite with SparkTestBase {
     (4L, Seq(20L, 21L), Map("waterway" -> "stream"), ts))
     .toDF("wid", "nids", "tags", "ts")
 
+  /** The GeoJSONSeq lines the CLI streams, collected. */
+  private def toGeoJsonSeq(features: org.apache.spark.sql.DataFrame): Seq[String] =
+    LumpWays.featureJson(features).collect()
+      .map(r => graft.outputs.GeoJson.seqFrame(r.getString(0))).toSeq
+
   private val degLonM = 111195.08023353292 / 1000.0 // 0.001° at equator
 
   test("flagship slice: filter + group + CC + lengths + ranks + geometry") {
@@ -71,7 +76,7 @@ class LumpWaysSpec extends AnyFunSuite with SparkTestBase {
     val cfg = Config(
       tagFilters = Seq(TagFilter.unsafeParse("waterway=river")),
       groupKeys = Seq(Seq("name")))
-    val out = LumpWays.toGeoJsonSeq(LumpWays.features(ways, nodes, cfg, spark))
+    val out = toGeoJsonSeq(LumpWays.features(ways, nodes, cfg, spark))
     assert(out.length == 2)
     assert(out.forall(s => s.head == '' && s.last == '\n'))
     assert(out(0).contains("\"root_nodeid\":10"))
@@ -86,7 +91,7 @@ class LumpWaysSpec extends AnyFunSuite with SparkTestBase {
     val cfg = Config(
       tagFilters = Seq(TagFilter.unsafeParse("waterway=river")),
       groupKeys = Seq(Seq("name")))
-    val out = LumpWays.toGeoJsonSeq(LumpWays.features(ways, nodes, cfg, spark))
+    val out = toGeoJsonSeq(LumpWays.features(ways, nodes, cfg, spark))
     // group B (rank 0): every key of main.rs:634-655 + rank/fraction
     // updates, in serde_json BTreeMap (alphabetical) order
     val expectedProps = """{"length_asc_rank":2,"length_asc_rank_perc":1.0,""" +
@@ -102,7 +107,7 @@ class LumpWaysSpec extends AnyFunSuite with SparkTestBase {
     val cfg = Config(
       tagFilters = Seq(TagFilter.unsafeParse("waterway=river")),
       groupKeys = Seq(Seq("name")), inclWayIds = true)
-    val out = LumpWays.toGeoJsonSeq(LumpWays.features(ways, nodes, cfg, spark))
+    val out = toGeoJsonSeq(LumpWays.features(ways, nodes, cfg, spark))
     // group B = way 3 only; group A post-compress vertices {1, 4} touch
     // ways 1 and 2 — "w{id}", id-sorted, deduped
     assert(out(0).contains(""""all_wayids":["w3"]"""), out(0))
@@ -152,7 +157,7 @@ class LumpWaysSpec extends AnyFunSuite with SparkTestBase {
     // first path = farthest pair 1..4 (expanded through 2, 3)
     assert(f(0).getAs[collection.Seq[collection.Seq[Long]]]("lines")
       == Seq(Seq(1L, 2L, 3L, 4L)))
-    val json = LumpWays.toGeoJsonSeq(
+    val json = toGeoJsonSeq(
       LumpWays.features(waysY, nodes, cfg, spark))
     assert(json.length == 2)
     assert(json.head.contains(""""dist_ends_m":"""), json.head)

@@ -54,7 +54,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       val df = graft.SparkEntry.queries(q)(spark, dir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
-      val windows = "Window ".r.findAllMatchIn(p).size
       // any Window operator present must have a partition spec; the plan
       // string for an unpartitioned window omits "partitionBy"... assert
       // via the physical marker Spark logs on: SinglePartition exchange

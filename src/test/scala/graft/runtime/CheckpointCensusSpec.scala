@@ -38,7 +38,7 @@ class CheckpointCensusSpec extends AnyFunSuite {
     "queries/QueriesStream.scala" -> 1,
     "runtime/CheckpointGen.scala" -> 1,
     "runtime/Ranks.scala" -> 3,
-    "text/SuffixArray.scala" -> 5,
+    "text/SuffixArray.scala" -> 4,
     "text/TextOps.scala" -> 4,
     "tools/MakeFixtureInput.scala" -> 1,
     "tools/ScaleEvidence.scala" -> 1,

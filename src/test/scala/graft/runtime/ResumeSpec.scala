@@ -81,11 +81,11 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     import graft.graph.Flow
     val edges = Seq(
       (1L, 2L, 10.0), (2L, 3L, 5.0), (4L, 3L, 7.0), (3L, 5L, 2.0))
-      .toDF("src", "dst", "len")
-    val plain = Flow.upstreamEqualSplit(edges)
+      .toDF("src", "dst", "len").withColumn("tag", lit(null).cast("string"))
+    val plain = Flow.upstreamFlow(edges)
     withTempDir("upckpt") { dir =>
       val cp = new IterationCheckpointer(spark, dir)
-      val ckpted = Flow.upstreamEqualSplit(edges, checkpointer = Some(cp.hook))
+      val ckpted = Flow.upstreamFlow(edges, checkpointer = Some(cp.hook))
       def m(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e6))).toMap
       assert(m(ckpted.nodeUpstream) == m(plain.nodeUpstream))

@@ -40,7 +40,8 @@ class SuffixArraySpec extends AnyFunSuite with SparkTestBase {
   private def df = docs.toDF("doc_id", "text")
 
   test("suffixRanks == brute-force capped suffix sort (ties by doc,pos)") {
-    val got = SuffixArray.suffixRanks(df, "doc_id", "text", cap)
+    val got = SuffixArray.saWithWindows(df, "doc_id", "text", cap)
+      .select("doc_id", "pos", "sa_rank")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sortBy(x => (x._1, x._2))
     val want = bruteSa.sortBy(x => (x._1, x._2))
@@ -105,7 +106,8 @@ class SuffixArraySpec extends AnyFunSuite with SparkTestBase {
       val ranks = adj.collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("pos")) ->
           r.getAs[Long]("sa_rank")).toMap
-      val wantRanks = SuffixArray.suffixRanks(df, "doc_id", "text", c)
+      val wantRanks = SuffixArray.saWithWindows(df, "doc_id", "text", c)
+        .select("doc_id", "pos", "sa_rank")
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
       assert(ranks == wantRanks, s"cap=$c ranks")
       val pairs = adj.where(col("doc_a").isNotNull)

@@ -1,7 +1,6 @@
 package graft.web
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** Hand-computed fixtures for the crawl-maintenance operators (q117
